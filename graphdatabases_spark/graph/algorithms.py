@@ -25,16 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.graph.model import PropertyGraph
 from graphdatabases_spark.graph.traversal import (
-    LOCAL_EDGE_THRESHOLD,
     _collect_adjacency,
     _local_result_df,
-    _pick_strategy,
     hash_partitioned_on,
 )
-
-CHECKPOINT_EVERY = 4
 
 RANK_SCHEMA = StructType(
     [StructField("id", LongType(), False), StructField("rank", DoubleType(), False)]
@@ -111,7 +108,6 @@ def pagerank(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """PageRank with fixed iteration count.
 
@@ -122,13 +118,14 @@ def pagerank(
 
     Returns DataFrame(id BIGINT, rank DOUBLE). One shuffle per iteration
     (the groupBy(dst)); the edges⋈ranks join reuses the edge partitioning.
-    Small edge sets (≤ ``local_threshold``) run the identical recurrence
+    Small edge sets (see ``regime.strategy``) run the identical recurrence
     driver-side — an N-round distributed loop on a toy graph pays N job
     latencies for nothing (same adaptive policy as the traversal kernel).
     """
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _pagerank_local(graph, edges, num_iters, damping)
+    with regime.strategy(edges, strategy) as (chosen, edges):
+        if chosen == "local":
+            return _pagerank_local(graph, edges, num_iters, damping)
     vertices = _vertices_from(graph, edges)
     n = vertices.count()
     if n == 0:
@@ -169,9 +166,9 @@ def pagerank(
                     ),
                 )
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             # Truncate the tail lineage: the caller's first action would
             # otherwise recompute the last rounds from `links` AFTER the
             # finally below unpersists it.
@@ -213,7 +210,6 @@ def personalized_pagerank(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart into ``sources``
     — the "related entities" operator (recommendations, seed-set
@@ -237,8 +233,9 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank needs at least one source")
     src_set = sorted(set(int(s) for s in sources))
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _ppr_local(graph, edges, src_set, num_iters, damping)
+    with regime.strategy(edges, strategy) as (chosen, edges):
+        if chosen == "local":
+            return _ppr_local(graph, edges, src_set, num_iters, damping)
     spark = _spark_of(edges)
     vertices = _vertices_from(graph, edges)
 
@@ -275,9 +272,9 @@ def personalized_pagerank(
                     + F.lit(damping) * F.coalesce("msg", F.lit(0.0))
                 ).alias("rank"),
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
     finally:
@@ -324,7 +321,6 @@ def personalized_pagerank_batch(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Per-seed personalized PageRank for a seed BATCH — the "related
     items for every seed in one pass" shape (batch recommendations,
@@ -350,8 +346,9 @@ def personalized_pagerank_batch(
         raise ValueError("personalized_pagerank_batch needs at least one seed")
     seed_list = sorted(set(int(s) for s in seeds))
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _ppr_batch_local(graph, edges, seed_list, num_iters, damping)
+    with regime.strategy(edges, strategy) as (chosen, edges):
+        if chosen == "local":
+            return _ppr_batch_local(graph, edges, seed_list, num_iters, damping)
     spark = _spark_of(edges)
 
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
@@ -397,9 +394,9 @@ def personalized_pagerank_batch(
                     base + F.lit(damping) * F.coalesce("msg", F.lit(0.0))
                 ).alias("rank"),
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
     finally:
@@ -483,9 +480,9 @@ def personalized_pagerank_batch_units(
                     )
                 ).cast("long").alias("rank_units"),
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
     finally:
@@ -523,44 +520,34 @@ def pagerank_units(
     Scale shape: the (src, dst, outdeg) relation shuffles once and is
     reused every round; each round is one join (reusing the edge
     partitioning) plus one dst-keyed aggregation; state is one BIGINT
-    per vertex; lineage truncated every ``CHECKPOINT_EVERY`` rounds.
+    per vertex; lineage truncated every ``regime.CHECKPOINT_EVERY`` rounds.
     No local fast path is needed: integer ops remove the only
     cross-strategy divergence (same policy as the per-seed kernel).
 
     Returns DataFrame(id BIGINT, rank_units BIGINT) over the graph's
     full vertex set.
     """
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     edges = _edges(graph)
     # The vertex frame re-enters the plan EVERY round (the left join
     # that hands each vertex its base units) — materialize it once;
     # without this each round re-runs the edge scan + explode-distinct
     # (measured 3.6× the whole entry's wall at sf0.1).
-    vertices = (
-        _vertices_from(graph, edges)
-        .select(F.col("id").cast("long"))
-        .localCheckpoint(eager=True)
-    )
     # Size-switched per-round broadcasts (round 14): a rank/msg row is
-    # 16 B, so below the frontier cap the per-vertex state broadcasts
+    # 16 B, so below the broadcast cap the per-vertex state broadcasts
     # (~4 MB at 186k vertices) and BOTH per-round joins become
     # broadcast-hash — the cached links relation streams with ZERO
     # exchange, and only the dst-keyed partial-agg output shuffles.
     # Above the cap the pre-r14 shuffle-join shape is unchanged.
-    n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
-
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
+    vertices, n_vertices = regime.materialize(
+        _vertices_from(graph, edges).select(F.col("id").cast("long"))
+    )
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
     links = edges.join(out_deg, edges.src == out_deg.id).select(
         "src", "dst", "outdeg"
     )
-    if not small and not hash_partitioned_on(links, "src"):
+    if n_vertices > regime.BROADCAST_MAX and not hash_partitioned_on(links, "src"):
         links = links.repartition("src")
     links = links.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -583,7 +570,7 @@ def pagerank_units(
         ranks = ranks.localCheckpoint(eager=True)
         for i in range(num_iters):
             msgs = (
-                links.join(_side(ranks), links.src == ranks.id)
+                links.join(regime.side(ranks, n_vertices), links.src == ranks.id)
                 .select(
                     F.col("dst").alias("id"),
                     F.expr("rank_units div outdeg").alias("contrib"),
@@ -591,7 +578,7 @@ def pagerank_units(
                 .groupBy("id")
                 .agg(F.sum("contrib").alias("msg"))
             )
-            ranks = vertices.join(_side(msgs), "id", "left").select(
+            ranks = vertices.join(regime.side(msgs, n_vertices), "id", "left").select(
                 "id",
                 (
                     F.lit(base_units)
@@ -600,9 +587,9 @@ def pagerank_units(
                 .cast("long")
                 .alias("rank_units"),
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             ranks = ranks.localCheckpoint(eager=True)
         return ranks
     finally:
@@ -638,7 +625,6 @@ def connected_components(
     graph: PropertyGraph | DataFrame,
     max_iters: int = 50,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Undirected connected components by iterative min-id propagation.
@@ -654,25 +640,19 @@ def connected_components(
         # Zero propagation rounds would silently return every vertex as
         # its own component (same hazard class as the kcore guard).
         raise ValueError(f"connected_components needs max_iters >= 1, got {max_iters}")
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
-        return _connected_components_local(graph, e)
+    with regime.strategy(e, strategy) as (chosen, e):
+        if chosen == "local":
+            return _connected_components_local(graph, e)
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     vertices = _vertices_from(graph, e)
     # Size-switched per-round broadcasts (round 14, the pagerank_units
-    # pattern): below the frontier cap the per-vertex label state
+    # pattern): below the broadcast cap the per-vertex label state
     # broadcasts and the cached sym streams with no setup repartition
     # and no per-round exchange of the label side; only the keyed min
     # aggregate shuffles.  Above the cap the shuffle shape is unchanged.
     n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
-
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    if not small:
+    if n_vertices > regime.BROADCAST_MAX:
         sym = sym.repartition("src")
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
     prev_cached: DataFrame | None = None
@@ -680,13 +660,13 @@ def connected_components(
         comp = vertices.select("id", F.col("id").alias("comp"))
         for i in range(max_iters):
             nbr_min = (
-                sym.join(_side(comp), sym.src == comp.id)
+                sym.join(regime.side(comp, n_vertices), sym.src == comp.id)
                 .select(F.col("dst").alias("id"), F.col("comp"))
                 .groupBy("id")
                 .agg(F.min("comp").alias("nbr_comp"))
             )
             new_comp = (
-                comp.join(_side(nbr_min), "id", "left")
+                comp.join(regime.side(nbr_min, n_vertices), "id", "left")
                 .select(
                     "id",
                     F.least(
@@ -694,7 +674,7 @@ def connected_components(
                     ).alias("comp"),
                 )
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 new_comp = new_comp.localCheckpoint(eager=True)
             else:
                 new_comp = new_comp.persist(StorageLevel.MEMORY_AND_DISK)
@@ -704,13 +684,13 @@ def connected_components(
             # cached blocks no longer accumulate across rounds.
             changed = (
                 new_comp.alias("n")
-                .join(_side(comp.alias("o")), "id")
+                .join(regime.side(comp.alias("o"), n_vertices), "id")
                 .filter(F.col("n.comp") != F.col("o.comp"))
                 .count()
             )
             if prev_cached is not None:
                 prev_cached.unpersist()
-            prev_cached = new_comp if (i + 1) % CHECKPOINT_EVERY != 0 else None
+            prev_cached = new_comp if (i + 1) % regime.CHECKPOINT_EVERY != 0 else None
             comp = new_comp
             if changed == 0:
                 break
@@ -758,7 +738,6 @@ def _triangle_count_local(edges: DataFrame) -> int:
 def triangle_count(
     graph: PropertyGraph | DataFrame,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> int:
     """Global triangle count on the undirected simple graph.
 
@@ -768,8 +747,9 @@ def triangle_count(
     splitting (and classically by degree-ordering, which a<b<c gives).
     """
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
-        return _triangle_count_local(e)
+    with regime.strategy(e, strategy) as (chosen, e):
+        if chosen == "local":
+            return _triangle_count_local(e)
     canon = (
         e.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -825,7 +805,6 @@ def label_propagation(
     graph: PropertyGraph | DataFrame,
     num_iters: int = 5,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Synchronous label propagation for community detection.
 
@@ -833,37 +812,30 @@ def label_propagation(
     among in+out neighbors (ties → smallest label — deterministic).
     Returns DataFrame(id BIGINT, label BIGINT).
     """
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
-        return _label_propagation_local(graph, e, num_iters)
+    with regime.strategy(e, strategy) as (chosen, e):
+        if chosen == "local":
+            return _label_propagation_local(graph, e, num_iters)
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Materialize the vertex set once: the per-round label rebuild
     # left-joins `vertices`, and without this the endpoint-distinct
     # (an O(edges) shuffle) re-executes every round.
-    vertices = _vertices_from(graph, e).localCheckpoint(eager=True)
+    vertices, n_vertices = regime.materialize(_vertices_from(graph, e))
     # Size-switched per-round broadcasts (round 14, the pagerank_units
-    # pattern): below the frontier cap the per-vertex label state
+    # pattern): below the broadcast cap the per-vertex label state
     # broadcasts and both per-round joins are broadcast-hash — sym
     # streams with no setup repartition and no per-round exchange of
     # the label side; only the keyed count aggregate shuffles.  Above
     # the cap the pre-r14 shuffle-join shape (src-clustered sym copy)
     # is unchanged.
-    n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
-
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    if not small:
+    if n_vertices > regime.BROADCAST_MAX:
         sym = sym.repartition("src")
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         labels = vertices.select("id", F.col("id").alias("label"))
         for i in range(num_iters):
             counts = (
-                sym.join(_side(labels), sym.src == labels.id)
+                sym.join(regime.side(labels, n_vertices), sym.src == labels.id)
                 .select(F.col("dst").alias("id"), "label")
                 .groupBy("id", "label")
                 .agg(F.count(F.lit(1)).alias("cnt"))
@@ -886,13 +858,13 @@ def label_propagation(
             # round — measured 131→272→551 MB shuffle for 1→2→3
             # rounds on the 3M-edge sf1 co-purchase graph before the
             # round-9 fix, ~linear after.
-            labels = vertices.join(_side(best), "id", "left").select(
+            labels = vertices.join(regime.side(best, n_vertices), "id", "left").select(
                 "id",
                 F.coalesce("new_label", F.col("id")).alias("label"),
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 labels = labels.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
+        if num_iters % regime.CHECKPOINT_EVERY != 0:
             # Truncate tail lineage: the caller's first action would
             # otherwise recompute every round from `sym` AFTER the
             # finally below unpersists it (same fix as pagerank).
@@ -938,7 +910,6 @@ def kcore(
     k: int = 2,
     max_iters: int = 50,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Nodes of the k-core (maximal subgraph with min degree ≥ k) and
@@ -957,8 +928,9 @@ def kcore(
         # zero-round "peel" would also silently return unpeeled degrees.
         raise ValueError(f"kcore needs max_iters >= 1, got {max_iters}")
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
-        return _kcore_local(graph, e, k)
+    with regime.strategy(e, strategy) as (chosen, e):
+        if chosen == "local":
+            return _kcore_local(graph, e, k)
     und = (
         e.filter(F.col("src") != F.col("dst"))
         .select(
@@ -980,7 +952,7 @@ def kcore(
                 survivors.select(F.col("src").alias("dst")), "dst", "semi"
             )
             new_deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 new_deg = new_deg.localCheckpoint(eager=True)
             else:
                 new_deg = new_deg.persist(StorageLevel.MEMORY_AND_DISK)
@@ -991,7 +963,7 @@ def kcore(
             dropped = new_deg.filter(F.col("deg") < k).count()
             if prev_cached is not None:
                 prev_cached.unpersist()
-            prev_cached = new_deg if (i + 1) % CHECKPOINT_EVERY != 0 else None
+            prev_cached = new_deg if (i + 1) % regime.CHECKPOINT_EVERY != 0 else None
             deg = new_deg
             # Re-anchor the edge filter on the materialized degree frame
             # rather than the growing semi-join lineage.
@@ -1029,7 +1001,7 @@ def _weighted_sssp_local(
 ) -> DataFrame:
     """Driver-side Dijkstra over a collected (src, dst, w) edge list —
     the bounded fast path (same threshold contract as the other
-    kernels: only below LOCAL_EDGE_THRESHOLD edges)."""
+    kernels: only below regime.LOCAL_EDGE_MAX edges)."""
     import heapq
 
     spark = _spark_of(wedges)
@@ -1059,7 +1031,6 @@ def weighted_sssp(
     weight_col: str = "w",
     max_iters: int = 30,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Weighted single-source shortest paths (Bellman-Ford / min-plus
@@ -1077,7 +1048,7 @@ def weighted_sssp(
     Scale shape: dist is hash-partitioned by id; each round is one
     equi-join dist⋈edges on the edge source + one min-aggregation on
     the destination — the same two-exchange round as PageRank/CC, with
-    ``localCheckpoint`` every ``CHECKPOINT_EVERY`` rounds to truncate
+    ``localCheckpoint`` every ``regime.CHECKPOINT_EVERY`` rounds to truncate
     lineage. Small edge sets run driver-side Dijkstra instead (same
     converged answer, no per-round job overhead).
 
@@ -1096,8 +1067,9 @@ def weighted_sssp(
     # repartitioned copy) — a separate up-front action would re-execute
     # the caller's whole edge-derivation plan one extra time (measured:
     # the entity-graph distinct exchange ran twice at sf1).
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _weighted_sssp_local(wedges, src)
+    with regime.strategy(edges, strategy) as (chosen, edges):
+        if chosen == "local":
+            return _weighted_sssp_local(wedges, src)
     spark = _spark_of(edges)
     if not hash_partitioned_on(wedges, "src"):
         wedges = wedges.repartition("src")
@@ -1132,7 +1104,7 @@ def weighted_sssp(
                     ).alias("dist"),
                 )
             )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
+            if (i + 1) % regime.CHECKPOINT_EVERY == 0:
                 new_dist = new_dist.localCheckpoint(eager=True)
             else:
                 new_dist = new_dist.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1148,7 +1120,7 @@ def weighted_sssp(
             if prev_cached is not None:
                 prev_cached.unpersist()
             prev_cached = (
-                new_dist if (i + 1) % CHECKPOINT_EVERY != 0 else None
+                new_dist if (i + 1) % regime.CHECKPOINT_EVERY != 0 else None
             )
             dist = new_dist
             if changed == 0:

@@ -12,34 +12,37 @@ root unless the root is re-reached via a cycle of length ≤ hops
 (Neo4j/ArangoDB behavior; OrientDB's root-included variant is available
 via ``include_root=True``).
 
-Execution strategy (the 100-TB design decision):
+Execution strategy (the 100-TB design decision), chosen by
+``regime.strategy``:
 
-- **distributed**: frontier BFS as repeated equi-joins —
-  ``frontier ⋈ edges on id=src → dst`` with per-round ``distinct`` and an
-  anti-join against the visited set. The edge set is persisted once
-  (unshuffled — the frontier side is broadcast, so the join needs no
-  co-partitioning) and every round's frontier is eagerly
-  ``localCheckpoint``-ed, which both truncates lineage (the classic
-  iterative-plan blowup) and guarantees the returned result holds no
-  reference to the unpersisted edge cache.
-- **local**: when the edge set is small enough to fit on the driver
-  (adaptive threshold, like Catalyst collapsing small plans to
-  LocalRelation), collect the adjacency list once (cached across calls
-  by plan semanticHash) and run BFS in-process. A 300-round distributed
-  loop on a 45k-edge graph pays ~300 job latencies for no parallelism
-  benefit; the local path answers in milliseconds, matching the
-  reference's server-side traversal times (BASELINE: 0.06-1.1 s for 300
-  hops).
-- **auto** (default): local if ``edges.count() ≤ min(local_threshold,
-  hops·500k)`` (default cap 2M edges) — one O(E) Arrow collect beats
-  ~1-2 s of fixed job latency per round until E is large relative to the
-  round count. At 100 TB the threshold is never met and the distributed
-  path runs.
+- **distributed**: one blocked-BSP frontier loop (``_bfs_distributed``)
+  serves all three calls.  Each level is ``frontier ⋈ edges on
+  id=src → dst``, an anti-join against the visited set and a per-level
+  reduction: ``distinct`` for k-hop/BFS, a per-id ``min(path)`` for the
+  path-carrying shortest path.  The edge set is persisted once
+  (unshuffled: the frontier side is broadcast while it has at most
+  ``regime.BROADCAST_MAX`` rows, else it shuffle-joins a src-clustered
+  copy).  While the frontier is small, up to 4 levels are composed into
+  one lazy block; the block is reduced by ``min`` per id and its
+  localCheckpoint is filled by the one probe job that also reads its
+  size (and the target hit for ``ssp``), so the fixed BSP latency is
+  paid once per block.  The checkpoints truncate lineage and guarantee
+  the result holds no reference to the unpersisted edge cache.
+- **local**: when the edge set fits on the driver, collect it once
+  (cached across calls by plan semanticHash) as a CSR index and run a
+  vectorized numpy BFS.  A 300-round distributed loop on a 45k-edge
+  graph pays ~300 job latencies for no parallelism benefit; the local
+  path answers in milliseconds, matching the reference's server-side
+  traversal times (BASELINE: 0.06-1.1 s for 300 hops).
+- **auto** (default): plan statistics decide when conclusive; else one
+  count pass picks local if ``edges ≤ min(regime.LOCAL_EDGE_MAX,
+  hops·500k)``.  A frame built from Python rows (``GraphEngine``
+  writes) has no statistics and is probed, not taken as large.  At
+  100 TB the statistics say distributed and no probe runs.
 """
 
 from __future__ import annotations
 
-import os
 from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.graph.model import PropertyGraph
 
 DIST_SCHEMA = StructType(
@@ -69,18 +73,15 @@ PATH_SCHEMA = StructType(
     ]
 )
 
-LOCAL_EDGE_THRESHOLD = 2_000_000
-CHECKPOINT_EVERY = 4
-
 # --- multi-hop blocking for the distributed BFS kernels (round 14) --------
 # The deep-traversal wall is NOT data volume: at depth 300 the grid500
 # bench rows spent ~0.5 s/hop of fixed synchronous-BSP latency (eager
 # checkpoint job + probe job + broadcast builds per hop) on frontiers of
 # a few hundred rows.  When the frontier is provably small, up to
 # _BLOCK_MAX_HOPS expansion levels are composed LAZILY into one plan and
-# materialized with ONE action (plus one cheap probe of the result), so
-# the per-hop scheduling floor is paid once per BLOCK instead of once
-# per hop.  Exactness: every level still anti-joins `visited` (all
+# materialized by ONE action (the block-end probe), so the per-hop
+# scheduling floor is paid once per BLOCK instead of once per hop.
+# Exactness: every level still anti-joins `visited` (all
 # pre-block discoveries), and the block result is reduced by
 # min(dist) per id before anything reads it — within-block re-discovery
 # echoes (an undirected edge walks back onto a level-i node at level
@@ -110,24 +111,6 @@ CHECKPOINT_EVERY = 4
 _BLOCK_MAX_HOPS = 4
 _BLOCK_SAFE_ROWS = 1_000_000
 
-# Distinct-deferred blocks (round 15): when the block's worst-case
-# per-level expansion is PROVABLY bounded — frontier_rows·max_deg^i,
-# with max_deg the measured max out-degree of the cached edge set, not
-# the learned growth estimate — the per-level ``distinct`` (bfs) /
-# ``groupBy(id).min(path)`` (ssp) shuffles are skipped entirely and the
-# block's one reduction (min(dist) / min(struct(dist, path))) dedups at
-# block end.  Every level's join and visited anti-join then broadcasts
-# a provably-small side, so a whole block plans with ZERO exchanges
-# before the block-end reduction; the per-level AQE shuffle-stage pair
-# that was the r14 floor disappears.  The multiset a level carries is
-# bounded by the same max_deg power that gates engagement, so nothing
-# relies on an estimate (advice r14: the learned ratio must not feed a
-# broadcast hint).  Levels past the proven bound, hub graphs
-# (max_deg blows the bound at i=1) and large-visited regimes fall back
-# to the r14 per-level-distinct path unchanged.
-_BLOCK_MAX_HOPS_DEFER = int(os.environ.get("SPARK_GRAFT_BFS_DEFER_K", "6"))
-_DEFER_ENABLED = os.environ.get("SPARK_GRAFT_BFS_DEFER", "1") != "0"
-
 # Per-partition byte target for the persisted traversal edge cache.
 # The per-level join schedules one task per cached edge partition; a
 # sub-threshold-adjacent graph (the 500-grid deep rows: 499k edges,
@@ -139,21 +122,15 @@ _DEFER_ENABLED = os.environ.get("SPARK_GRAFT_BFS_DEFER", "1") != "0"
 _EDGE_CACHE_PARTITION_BYTES = 64 << 20
 
 
-def _block_k(
-    frontier_rows: int,
-    growth: float,
-    remaining: int | None,
-    cap: int = _BLOCK_MAX_HOPS,
-    safe_rows: int = _BLOCK_SAFE_ROWS,
-) -> int:
+def _block_k(frontier_rows: int, growth: float, remaining: int | None) -> int:
     """Largest hop-block size whose worst-case frontier estimate stays
-    under ``safe_rows`` (always >= 1; capped by remaining hops)."""
+    under ``_BLOCK_SAFE_ROWS`` (always >= 1; capped by remaining hops)."""
     k = 1
     est = frontier_rows * growth
     while (
-        k < cap
+        k < _BLOCK_MAX_HOPS
         and (remaining is None or k < remaining)
-        and est * growth <= safe_rows
+        and est * growth <= _BLOCK_SAFE_ROWS
     ):
         k += 1
         est *= growth
@@ -166,17 +143,6 @@ def _next_growth(ratio_k: float, k: int) -> float:
     floored at 2x and capped at 64x."""
     per_level = max(ratio_k, 1e-9) ** (1.0 / k)
     return min(64.0, max(2.0, 2.0 * per_level))
-
-# Frontier rows above which the per-round join switches from broadcast
-# to shuffle. An (id, dist) frontier row is ~16 bytes, so 4M rows is
-# ~64 MB serialized — comfortably broadcastable; past that, a high-
-# fan-out graph's frontier (tens of millions of rows after 2-3 hops)
-# would blow the 8 GB broadcast hard limit and driver memory, so the
-# kernel shuffle-joins against a src-clustered edge copy instead (built
-# lazily, once — only traversals that ever exceed the threshold pay
-# for it).
-FRONTIER_BROADCAST_MAX = 4_000_000
-
 
 def _edges_df(graph: PropertyGraph | DataFrame) -> DataFrame:
     if isinstance(graph, PropertyGraph):
@@ -192,21 +158,6 @@ def _shuffle_partitions(spark: SparkSession) -> int:
     """Session shuffle-partition count — the coalesce cap for the
     iterative loops' accumulated-union checkpoints."""
     return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
-# Catalyst-statistics short-circuit for the auto policy: optimizedPlan
-# stats are free (no job), derived from file sizes through the operator
-# tree. Below 64 MB the edge set certainly fits on the driver; above
-# 4 GB it certainly doesn't; in between run the one-pass count probe.
-_STATS_LOCAL_BYTES = 64 << 20
-_STATS_DIST_BYTES = 4 << 30
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
 
 
 # Probe results cached by (semanticHash, col): the executedPlan() call
@@ -267,31 +218,6 @@ def hash_partitioned_on(df: DataFrame, col: str) -> bool:
             _HASHPART_CACHE.clear()
         _HASHPART_CACHE[key] = out
     return out
-
-
-def _pick_strategy(edges: DataFrame, strategy: str, local_threshold: int) -> str:
-    decision = _decide_strategy(edges, strategy)
-    if decision != "probe":
-        return decision
-    return "local" if edges.count() <= local_threshold else "distributed"
-
-
-def _decide_strategy(edges: DataFrame, strategy: str) -> str:
-    """'local' | 'distributed' | 'probe' (= stats inconclusive, count)."""
-    if strategy != "auto":
-        return strategy
-    # Already collected this edge set → local, no job at all.
-    if edges.semanticHash() in _ADJ_CACHE:
-        return "local"
-    size = _plan_size_bytes(edges)
-    if size is not None:
-        if size <= _STATS_LOCAL_BYTES:
-            return "local"
-        if size >= _STATS_DIST_BYTES:
-            return "distributed"
-    # Ambiguous: count is a single pass; at 100 TB the stats said
-    # distributed already, so the probe never runs there.
-    return "probe"
 
 
 # ---------------------------------------------------------------------------
@@ -434,30 +360,6 @@ def _bfs_numpy(idx: _AdjIndex, src: int, max_hops: int | None):
     return dist
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _materialized(edges: DataFrame, decision: str):
-    """Cache the (possibly join-derived) edge plan for the duration of a
-    traversal call when the strategy probe needs a count pass: the probe,
-    the adjacency collect, and every BFS round then read the cache
-    instead of re-running the plan. When Catalyst statistics already
-    decided ('local'/'distributed'), the plan is consumed exactly once
-    (one Arrow collect, or persisted inside the BFS kernel itself), so
-    persisting here would only add a redundant materialization pass.
-    Results escape the block only in materialized form (driver lists or
-    eager checkpoints), so the unpersist is safe."""
-    if decision == "probe":
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            yield edges
-        finally:
-            edges.unpersist()
-    else:
-        yield edges
-
-
 def _all_integral(rows: list, schema: StructType) -> bool:
     """True when every value is an int (or an array of ints) matching an
     integral(-array) schema field — the only shapes the SQL-literal
@@ -551,8 +453,9 @@ def _local_result_df(spark: SparkSession, rows: list, schema: StructType) -> Dat
             )
         except Exception:  # pragma: no cover - fallback for exotic types
             pass
-    # Empty results: plain-list createDataFrame compiles to a
-    # LocalRelation in half the RPC roundtrips of parallelize().
+    # Empty results: a plain-list createDataFrame (a LogicalRDD
+    # without statistics) costs half the RPC roundtrips of
+    # parallelize().
     return spark.createDataFrame(rows, schema)
 
 
@@ -674,7 +577,7 @@ class _EdgeSides:
 
     ``plain`` is the as-scanned cache (no shuffle) that broadcast-frontier
     rounds join against.  ``by_src`` — built lazily, only if some round's
-    frontier exceeds ``FRONTIER_BROADCAST_MAX`` — is a src-hash-clustered
+    frontier exceeds ``regime.BROADCAST_MAX`` — is a src-hash-clustered
     copy (SURVEY §4.3.2): its InMemoryTableScan reports
     HashPartitioning(src), so a shuffle join against it exchanges ONLY
     the frontier side each round.
@@ -690,7 +593,7 @@ class _EdgeSides:
         # the shuffle-join regime exploits, re-introducing the per-round
         # edge exchange the bucketed layout exists to avoid.
         if not hash_partitioned_on(plain, "src"):
-            est = _plan_size_bytes(plain)
+            est = regime.plan_size_bytes(plain)
             if est is not None and est > 0:
                 # min() keeps the arg in Java-int range when stats
                 # report "unknown" as Long.MaxValue; coalesce clamps to
@@ -720,13 +623,12 @@ class _EdgeSides:
 
     def max_out_degree(self) -> int:
         """Max out-degree of the cached edge set (one aggregate job,
-        computed lazily and memoized).  The multi-hop block loops use
+        computed lazily and memoized).  The multi-hop block loop uses
         ``frontier_rows * max_deg^i`` as a PROVABLE bound on the level-i
         expansion — the broadcast gate for in-block levels (advice r14:
         the learned growth ratio is an estimate, and a hub vertex inside
         a small frontier could otherwise get an F.broadcast hint on tens
-        of millions of rows) and the engage condition for the per-level
-        distinct deferral."""
+        of millions of rows)."""
         if self._max_out_deg is None:
             row = (
                 self.plain.groupBy("src")
@@ -739,7 +641,7 @@ class _EdgeSides:
 
     def join_frontier(self, frontier: DataFrame, frontier_rows: int) -> DataFrame:
         """frontier ⋈ edges on id=src, picking the join side by size."""
-        if frontier_rows <= FRONTIER_BROADCAST_MAX:
+        if frontier_rows <= regime.BROADCAST_MAX:
             return self.plain.join(F.broadcast(frontier), F.col("src") == F.col("id"))
         return self.by_src().join(frontier, F.col("src") == F.col("id"))
 
@@ -753,26 +655,46 @@ def _bfs_distributed(
     edges: DataFrame,
     src: int,
     max_hops: int | None,
-    checkpoint_every: int = CHECKPOINT_EVERY,
-) -> DataFrame:
-    """Frontier BFS as an iterative join loop; returns DataFrame(id, dist).
+    dst: int | None = None,
+) -> tuple[DataFrame, tuple[int, list[int]] | None]:
+    """Blocked-BSP frontier BFS from ``src``: the one distributed loop
+    behind ``bfs_distances``, ``khop`` and ``ssp``.
 
-    Each round joins the frontier against the persisted edges — broadcast
-    while the frontier is small (no co-partitioning, so the edge cache
-    needs NO up-front shuffle), switching to a shuffle join against a
-    src-clustered edge copy once the frontier outgrows
-    ``FRONTIER_BROADCAST_MAX`` (see ``_EdgeSides``) — then a
-    map-side-combinable distinct and an anti-join against visited.
-    Small-frontier hops are composed into lazy multi-hop blocks (see
-    ``_BLOCK_MAX_HOPS``) so the fixed BSP scheduling latency is paid
-    once per block; lineage is truncated with one eager localCheckpoint
-    per block.
+    Returns ``(visited, hit)``: ``visited`` is the checkpointed
+    DataFrame(id, dist) of the nodes reached within ``max_hops``.  With
+    ``dst`` set, every frontier row also carries one path, the loop
+    stops as soon as ``dst`` is reached, and ``hit`` is its
+    ``(dist, path)`` with the lexicographically smallest shortest path
+    (None if unreached).
+
+    Each level joins the frontier against the persisted edges (the
+    broadcast/shuffle switch is ``_EdgeSides``'), anti-joins the
+    pre-block ``visited`` and reduces per id: ``distinct`` for an id
+    frontier, ``min(path)`` for a path frontier (equal-length paths
+    compare element-wise, so the per-level min keeps the global
+    lex-min-path invariant).  Small-frontier levels are composed into
+    lazy blocks (see ``_BLOCK_MAX_HOPS``) that end with a ``min`` per
+    id: ``min(dist)``, or ``min(struct(dist, path))`` where dist leads,
+    so the true first discovery beats within-block echoes.
     """
     spark = _spark_of(edges)
+    paths = dst is not None
+    # What a path payload changes: the frontier's columns, the per-level
+    # reduction, and the extra target-hit probe column — dist leads the
+    # struct, so the min is the earliest, then lex-smallest, dst path.
+    cols = ["id", "path"] if paths else ["id"]
+    frontier = (
+        spark.createDataFrame([(src, 0, [src])], "id BIGINT, dist INT, path ARRAY<BIGINT>")
+        if paths
+        else spark.createDataFrame([(src, 0)], DIST_SCHEMA)
+    )
+    payload, probes = [], []
+    if paths:
+        payload = [F.concat(F.col("path"), F.array(F.col("dst"))).alias("path")]
+        probes = [F.min(F.when(F.col("id") == dst, F.struct("dist", "path"))).alias("hit")]
     sides = _EdgeSides(edges)
     try:
-        frontier = spark.createDataFrame([(src, 0)], DIST_SCHEMA)
-        visited = frontier
+        visited = frontier.select("id", "dist")
         visited_rows = 1
         frontier_rows = 1
         d = 0
@@ -781,79 +703,72 @@ def _bfs_distributed(
         while (max_hops is None or d < max_hops) and frontier_rows > 0:
             remaining = None if max_hops is None else max_hops - d
             k = _block_k(frontier_rows, growth, remaining)
-            defer = False
-            max_deg = None
-            if k > 1:
-                # Small-frontier regime: fetch the real degree bound
-                # (lazy one-time aggregate) — it gates the in-block
-                # broadcasts and, when it proves the whole block small,
-                # engages the distinct-deferred fast path.
-                max_deg = sides.max_out_degree()
-                if _DEFER_ENABLED and visited_rows <= FRONTIER_BROADCAST_MAX:
-                    # The binding constraint on a deferred (id, dist)
-                    # multiset is the per-level broadcast cap itself —
-                    # rows are 16 B, so FRONTIER_BROADCAST_MAX (~64 MB)
-                    # is also a safe materialization bound.
-                    kd = _block_k(
-                        frontier_rows, float(max_deg), remaining,
-                        cap=_BLOCK_MAX_HOPS_DEFER,
-                        safe_rows=FRONTIER_BROADCAST_MAX,
-                    )
-                    if kd >= 2:
-                        defer, k = True, kd
+            # Small-frontier regime: the real degree bound (lazy
+            # one-time aggregate) gates the in-block broadcasts.
+            max_deg = sides.max_out_degree() if k > 1 else None
             # Compose k hops lazily; each level anti-joins the
             # pre-block `visited` only (within-block echoes are removed
-            # by the min(dist) reduction below — see _BLOCK_MAX_HOPS).
-            # The visited side broadcasts while its EXACT row count is
-            # under the cap (one build per block, reused by every
-            # level); in-block level i's frontier side broadcasts only
-            # when the PROVABLE bound frontier_rows·max_deg^(i-1)
-            # clears the cap (advice r14 — never an estimate).
-            vis = (
-                F.broadcast(visited)
-                if visited_rows <= FRONTIER_BROADCAST_MAX
-                else visited
-            )
-            f = frontier.select("id")
+            # by the block-end min below — see _BLOCK_MAX_HOPS).  The
+            # visited side broadcasts while its EXACT row count is under
+            # the cap (one build per block, reused by every level).
+            vis = regime.side(visited.select("id"), visited_rows)
+            f = frontier.select(*cols)
             block = None
             for i in range(1, k + 1):
-                gate_rows = (
+                # In-block level i's frontier side broadcasts only when
+                # the PROVABLE bound frontier_rows·max_deg^(i-1) clears
+                # the cap (advice r14 — never an estimate).  A
+                # path-carrying row is ~8·d bytes, not 16: scale the
+                # bound by the path length.
+                bound = (
                     frontier_rows
                     if i == 1 or max_deg is None
                     else frontier_rows * max_deg ** (i - 1)
                 )
-                nf = sides.join_frontier(f, gate_rows).select(
-                    F.col("dst").alias("id")
+                if paths:
+                    bound *= max(1, (d + i) // 2)
+                nf = (
+                    sides.join_frontier(f, bound)
+                    .select(F.col("dst").alias("id"), *payload)
+                    .join(vis, "id", "left_anti")
                 )
-                if not defer:
-                    nf = nf.distinct()
-                nf = nf.join(vis, "id", "left_anti").select(
-                    F.col("id"), F.lit(d + i).cast("int").alias("dist")
+                nf = (
+                    nf.groupBy("id").agg(F.min("path").alias("path"))
+                    if paths
+                    else nf.distinct()
                 )
-                block = nf if block is None else block.unionByName(nf)
-                f = nf.select("id")
+                lvl = nf.withColumn("dist", F.lit(d + i).cast("int"))
+                block = lvl if block is None else block.unionByName(lvl)
+                f = nf
             if k > 1:
-                block = block.groupBy("id").agg(F.min("dist").alias("dist"))
-            # Eager checkpoint ONCE PER BLOCK: the returned `visited`
-            # must not retain lineage into `edges`, which is unpersisted
-            # when this function returns — lazy persistence here would
-            # silently recompute the whole loop (from the raw edge plan)
-            # at the caller's first action.
-            block = block.localCheckpoint(eager=True)
-            # One cheap probe of the fresh checkpoint: emptiness test,
-            # next block's broadcast-vs-shuffle sizing, and the growth
-            # re-estimate all come out of a single aggregate.
+                block = (
+                    block.groupBy("id")
+                    .agg(F.min(F.struct("dist", "path")).alias("m"))
+                    .select("id", "m.dist", "m.path")
+                    if paths
+                    else block.groupBy("id").agg(F.min("dist").alias("dist"))
+                )
+            # One action per block: the probe fills the block's lazy
+            # checkpoint (regime.materialize's pattern) and reads its
+            # emptiness, the last level's size (next block's sizing and
+            # growth re-estimate) and the target hit.  The checkpoint
+            # also keeps `visited` free of lineage into `edges`, which
+            # is unpersisted when this function returns.
+            block = block.localCheckpoint(eager=False)
             stats = block.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count(F.when(F.col("dist") == d + k, 1)).alias("nlast"),
+                *probes,
             ).collect()[0]
+            if paths and stats["hit"] is not None:
+                return visited, (stats["hit"]["dist"], list(stats["hit"]["path"]))
             if stats["n"] == 0:
                 break
-            visited = visited.union(block)
+            visited = visited.union(block.select("id", "dist"))
             visited_rows += stats["n"]
             d += k
             since_ckpt += k
-            if since_ckpt >= checkpoint_every:
+            if since_ckpt >= regime.CHECKPOINT_EVERY:
                 # Collapse the growing union tree so plan size stays
                 # O(1) — AND coalesce first: each union appends the
                 # block's partitions, so without the coalesce the
@@ -869,7 +784,7 @@ def _bfs_distributed(
                 # one task instead of shuffle_partitions of them.
                 visited = visited.coalesce(
                     1
-                    if visited_rows <= FRONTIER_BROADCAST_MAX
+                    if visited_rows <= regime.BROADCAST_MAX
                     else _shuffle_partitions(spark)
                 ).localCheckpoint(eager=True)
                 since_ckpt = 0
@@ -879,7 +794,7 @@ def _bfs_distributed(
                 )
             frontier_rows = stats["nlast"]
             frontier = block.filter(F.col("dist") == d)
-        return visited
+        return visited, None
     finally:
         sides.release()
 
@@ -893,7 +808,6 @@ def bfs_distances(
     src: int,
     max_hops: int | None = None,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Shortest hop-count distance from ``src`` to every reachable node.
 
@@ -901,19 +815,8 @@ def bfs_distances(
     """
     plan = _edges_df(graph)  # already src/dst-projected; no re-select RPC
     spark = _spark_of(plan)
-    eff_threshold = (
-        min(local_threshold, max_hops * 500_000) if max_hops else local_threshold
-    )
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= eff_threshold else "distributed")
-        )
+    with regime.strategy(plan, strategy, max_hops) as (chosen, edges):
         if chosen == "local":
-            import numpy as np
-
             idx = _collect_index(edges)
             dist = _bfs_numpy(idx, src, max_hops)
             if dist is None:  # src absent from the edge universe
@@ -924,7 +827,7 @@ def bfs_distances(
                 {"id": idx.universe[mask], "dist": dist[mask]},
                 DIST_SCHEMA,
             )
-        return _bfs_distributed(edges, src, max_hops)
+        return _bfs_distributed(edges, src, max_hops)[0]
 
 
 def khop(
@@ -933,7 +836,6 @@ def khop(
     hops: int,
     include_root: bool = False,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """All distinct nodes reachable from ``src`` in 1..hops directed hops.
 
@@ -946,19 +848,7 @@ def khop(
     """
     plan = _edges_df(graph)  # already src/dst-projected; no re-select RPC
     spark = _spark_of(plan)
-    # Crossover economics: local pays one O(E) Arrow collect (~1 s per
-    # million edges), distributed pays ~1-2 s of fixed job latency PER
-    # ROUND regardless of size. Local therefore wins unless the edge set
-    # is large relative to the round count.
-    eff_threshold = min(local_threshold, hops * 500_000)
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= eff_threshold else "distributed")
-        )
-
+    with regime.strategy(plan, strategy, hops) as (chosen, edges):
         if chosen == "local":
             import numpy as np
 
@@ -982,7 +872,7 @@ def khop(
                 mask[pos] = True
             return _numpy_result_df(spark, {"id": idx.universe[mask]}, id_schema)
 
-        visited = _bfs_distributed(edges, src, hops)
+        visited, _ = _bfs_distributed(edges, src, hops)
         result = visited.filter(F.col("dist") >= 1).select("id").localCheckpoint(
             eager=True
         )
@@ -1011,7 +901,6 @@ def ssp(
     dst: int,
     max_hops: int | None = None,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Unweighted shortest path ``src → dst``; path returned.
 
@@ -1027,159 +916,11 @@ def ssp(
     """
     plan = _edges_df(graph)  # already src/dst-projected; no re-select RPC
     spark = _spark_of(plan)
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= local_threshold else "distributed")
-        )
-
+    with regime.strategy(plan, strategy) as (chosen, edges):
         if chosen == "local":
             hit = _ssp_numpy(_collect_index(edges), src, dst, max_hops)
-            rows = [] if hit is None else [hit]
-            return _local_result_df(spark, rows, PATH_SCHEMA)
-
-        return _ssp_distributed(edges, src, dst, max_hops)
-
-
-def _ssp_distributed(
-    edges: DataFrame,
-    src: int,
-    dst: int,
-    max_hops: int | None,
-    checkpoint_every: int = CHECKPOINT_EVERY,
-) -> DataFrame:
-    """BFS carrying one lexicographically-smallest path per frontier node.
-
-    Per round: expand frontier paths along edges, keep ``min(path)`` per
-    destination (deterministic tie-break), drop already-visited nodes,
-    early-exit as soon as ``dst`` enters the frontier.
-    """
-    spark = _spark_of(edges)
-    if src == dst:
-        return spark.createDataFrame([(0, [src])], PATH_SCHEMA)
-    sides = _EdgeSides(edges)
-    try:
-        frontier = spark.createDataFrame(
-            [(src, [src])],
-            StructType(
-                [
-                    StructField("id", LongType(), False),
-                    StructField("path", ArrayType(LongType()), False),
-                ]
-            ),
-        )
-        visited = frontier.select("id")
-        visited_rows = 1
-        frontier_rows = 1
-        d = 0
-        growth = 8.0  # conservative prior; learned per block (_next_growth)
-        since_ckpt = 0
-        while (max_hops is None or d < max_hops) and frontier_rows > 0:
-            remaining = None if max_hops is None else max_hops - d
-            k = _block_k(frontier_rows, growth, remaining)
-            max_deg = sides.max_out_degree() if k > 1 else None
-            # NOTE (round 15, measured): the bfs kernel's distinct
-            # deferral is NOT applied here — without the per-level
-            # min(path) reduction the candidate multiset carries one row
-            # PER SHORTEST WALK (binomially many on lattice-like
-            # graphs), each with a growing path array; the 300-grid
-            # fixture regressed 16 s → 24-36 s.  The per-level reduction
-            # stays; only the broadcast gates (worst-case max_deg bound,
-            # exact visited count) changed.
-            # Compose k hops lazily (see _bfs_distributed / the
-            # _BLOCK_MAX_HOPS note): each level anti-joins the pre-block
-            # `visited` and keeps the per-id lexicographic min path —
-            # equal-length paths compare element-wise, so the per-level
-            # reduction preserves the global lex-min-path invariant.
-            # Within-block echoes (a node re-discovered at a strictly
-            # larger level) are dropped by the min(struct(dist, path))
-            # reduction below: dist leads the struct, so the true first
-            # discovery always wins, and echo-generated candidates land
-            # strictly above their child's true level.
-            vis = (
-                F.broadcast(visited)
-                if visited_rows <= FRONTIER_BROADCAST_MAX
-                else visited
-            )
-            f = frontier
-            block = None
-            for i in range(1, k + 1):
-                bound = (
-                    frontier_rows
-                    if i == 1 or max_deg is None
-                    else frontier_rows * max_deg ** (i - 1)
-                )
-                # A path-carrying frontier row is ~8·d bytes, not 16:
-                # scale the broadcast cutoff down by the path length.
-                eff_rows = bound * max(1, (d + i) // 2)
-                nf = (
-                    sides.join_frontier(f, eff_rows)
-                    .select(
-                        F.col("dst").alias("id"),
-                        F.concat(F.col("path"), F.array(F.col("dst"))).alias(
-                            "path"
-                        ),
-                    )
-                    .join(vis, "id", "left_anti")
-                    .groupBy("id")
-                    .agg(F.min("path").alias("path"))
-                )
-                lvl = nf.select(
-                    "id", F.lit(d + i).cast("int").alias("dist"), "path"
-                )
-                block = lvl if block is None else block.unionByName(lvl)
-                f = nf
-            if k > 1:
-                block = (
-                    block.groupBy("id")
-                    .agg(F.min(F.struct("dist", "path")).alias("m"))
-                    .select("id", F.col("m.dist").alias("dist"),
-                            F.col("m.path").alias("path"))
-                )
-            block = block.localCheckpoint(eager=True)
-            # ONE probe per block: emptiness test, next block's
-            # broadcast sizing, AND the destination hit — dist leads the
-            # struct so the min is the earliest (then lex-min) dst path.
-            probe = block.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("dist") == d + k, 1)).alias("nlast"),
-                F.min(
-                    F.when(F.col("id") == dst, F.struct("dist", "path"))
-                ).alias("hit"),
-            ).collect()[0]
-            if probe["hit"] is not None:
-                return _local_result_df(
-                    spark,
-                    [(probe["hit"]["dist"], list(probe["hit"]["path"]))],
-                    PATH_SCHEMA,
-                )
-            if probe["n"] == 0:
-                break
-            visited = visited.union(block.select("id"))
-            visited_rows += probe["n"]
-            d += k
-            since_ckpt += k
-            if since_ckpt >= checkpoint_every:
-                # coalesce caps the checkpointed partition count (see
-                # _bfs_distributed — unbounded growth with depth; one
-                # partition in the broadcast regime so each per-block
-                # visited broadcast build schedules one task).
-                visited = visited.coalesce(
-                    1
-                    if visited_rows <= FRONTIER_BROADCAST_MAX
-                    else _shuffle_partitions(spark)
-                ).localCheckpoint(eager=True)
-                since_ckpt = 0
-            if k > 1:
-                growth = _next_growth(
-                    probe["nlast"] / max(frontier_rows, 1), k
-                )
-            frontier_rows = probe["nlast"]
-            frontier = block.filter(F.col("dist") == d).select("id", "path")
-        return _local_result_df(spark, [], PATH_SCHEMA)
-    finally:
-        # Results are driver-local rows (every return path), so the
-        # persisted edge copies can be dropped unconditionally.
-        sides.release()
+        elif src == dst:
+            hit = (0, [src])
+        else:
+            hit = _bfs_distributed(edges, src, max_hops, dst)[1]
+        return _local_result_df(spark, [] if hit is None else [hit], PATH_SCHEMA)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_centrality_queries import (
     _MOD_EDGES_SQL,
@@ -226,17 +227,14 @@ def _weighted_local_move(
     dropped), so the surviving moves touch pairwise-disjoint
     communities and apply simultaneously with exactly-additive gains.
     """
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
-
     _ckpt = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     # Size-switched broadcasts of every per-vertex / per-community side
     # (round 14, the pagerank_units pattern): labels, strength, sig,
-    # kvs and post are all <= |V| rows, so below the frontier cap each
+    # kvs and post are all <= |V| rows, so below the broadcast cap each
     # join against the edge-sized streams (sadj, wg, kvc) is broadcast-
     # hash and only the keyed aggregates shuffle; above the cap the
     # shuffle-join shape is unchanged.
     n_v = labels.count()
-    _side = lambda df: _mis_side(df, n_v)  # noqa: E731
     inter = wg.filter(F.col("u") != F.col("v"))
     sadj = inter.select(
         F.col("u").alias("a"), F.col("v").alias("b"), "w"
@@ -253,16 +251,17 @@ def _weighted_local_move(
     )
     strength = _ckpt(strength)
     sig = _ckpt(
-        labels.join(_side(strength), "id")
+        labels.join(regime.side(strength, n_v), "id")
         .groupBy("label")
         .agg(F.sum("k").cast("long").alias("sig"))
     )
     kvc = (
         sadj.join(
-            _side(
+            regime.side(
                 labels.select(
                     F.col("id").alias("b"), F.col("label").alias("c")
-                )
+                ),
+                n_v,
             ),
             "b",
         )
@@ -279,22 +278,24 @@ def _weighted_local_move(
         .select("id", "s", F.coalesce("k_own", F.lit(0)).alias("k_own"))
     )
     gains = (
-        kvc.join(_side(kvs), "id")
+        kvc.join(regime.side(kvs, n_v), "id")
         .filter(F.col("c") != F.col("s"))
-        .join(_side(strength), "id")
+        .join(regime.side(strength, n_v), "id")
         .join(
-            _side(
+            regime.side(
                 sig.select(
                     F.col("label").alias("c"), F.col("sig").alias("sig_c")
-                )
+                ),
+                n_v,
             ),
             "c",
         )
         .join(
-            _side(
+            regime.side(
                 sig.select(
                     F.col("label").alias("s"), F.col("sig").alias("sig_s")
-                )
+                ),
+                n_v,
             ),
             "s",
         )
@@ -338,7 +339,7 @@ def _weighted_local_move(
     )
     post = (
         labels.join(
-            _side(movers.select("id", F.col("c").alias("new_label"))),
+            regime.side(movers.select("id", F.col("c").alias("new_label")), n_v),
             "id",
             "left",
         )
@@ -350,8 +351,8 @@ def _weighted_local_move(
         la = lbl.select(F.col("id").alias("u"), F.col("label").alias("la"))
         lb = lbl.select(F.col("id").alias("v"), F.col("label").alias("lb"))
         return (
-            wg.join(_side(la), "u")
-            .join(_side(lb), "v")
+            wg.join(regime.side(la, n_v), "u")
+            .join(regime.side(lb, n_v), "v")
             .filter(F.col("la") == F.col("lb"))
             .agg(
                 F.coalesce(F.sum("w"), F.lit(0))
@@ -367,7 +368,7 @@ def _weighted_local_move(
             .alias(f"sum_d2_{alias}")
         )
 
-    sig_after = post.join(_side(strength), "id").groupBy("label").agg(
+    sig_after = post.join(regime.side(strength, n_v), "id").groupBy("label").agg(
         F.sum("k").cast("long").alias("sig")
     )
     stats = (
@@ -441,17 +442,14 @@ def _contract(wg: DataFrame, post: DataFrame) -> DataFrame:
     )
 
 
-# Contracted graphs at or below this many weighted-edge rows run the
-# remaining levels on the driver-local exact-integer path — the same
-# adaptive strategy as graph/traversal.py's CSR fast path (its
-# LOCAL_EDGE_THRESHOLD, reused here): a |communities|-sized graph is a
-# few MB of (u, v, w) BIGINT triples, and one in-process pass beats
-# ~30 BSP stage launches by two orders of magnitude.  Above the
-# threshold (a 100 TB corpus whose level-0 partition still has tens of
-# millions of communities) the distributed pass keeps running.
-from graphdatabases_spark.graph.traversal import (  # noqa: E402
-    LOCAL_EDGE_THRESHOLD as _WLM_LOCAL_THRESHOLD,
-)
+# Contracted graphs at or below regime.LOCAL_EDGE_MAX weighted-edge rows
+# run the remaining levels on the driver-local exact-integer path — the
+# same adaptive strategy as graph/traversal.py's CSR fast path: a
+# |communities|-sized graph is a few MB of (u, v, w) BIGINT triples,
+# and one in-process pass beats ~30 BSP stage launches by two orders of
+# magnitude.  Above the threshold (a 100 TB corpus whose level-0
+# partition still has tens of millions of communities) the distributed
+# pass keeps running.
 
 
 def _wlm_pass_local(
@@ -581,7 +579,7 @@ def _contract_local(wg: dict, post: dict) -> dict:
     "relation) on the FULL graph; contraction is one join + one "
     "keyed agg; and the contracted levels use the traversal engine's "
     "adaptive strategy — a sub-threshold community graph (bounded "
-    "collect, <= LOCAL_EDGE_THRESHOLD weighted rows) runs each "
+    "collect, <= regime.LOCAL_EDGE_MAX weighted rows) runs each "
     "remaining level as one in-process exact-integer pass instead of "
     "~30 BSP stage launches, while an above-threshold one stays on "
     "the distributed pass. All distributed anchors localCheckpoint "
@@ -633,7 +631,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf: str) -> DataFrame:
                 stats.select(F.lit(lvl).cast("long").alias("level"), "*")
             )
             if lvl < _WLM_LEVELS - 1:
-                wg = _contract(wg, post).localCheckpoint(eager=True)
+                wg, n_wg = regime.materialize(_contract(wg, post))
                 # Adaptive strategy (the traversal engine's sub-threshold
                 # CSR pattern): the contracted graph is |communities|-
                 # sized; at or below the shared threshold its remaining
@@ -641,7 +639,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf: str) -> DataFrame:
                 # of ~30 BSP stage launches (measured ~4 s/level of pure
                 # scheduling at sf0.1's 1k-node level-1 graph).  The
                 # collect is bounded by the threshold check itself.
-                if wg.count() <= _WLM_LOCAL_THRESHOLD:
+                if n_wg <= regime.LOCAL_EDGE_MAX:
                     local_wg = {
                         (r["u"], r["v"]): r["w"] for r in wg.collect()
                     }

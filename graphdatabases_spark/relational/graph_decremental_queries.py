@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_incremental_queries import (
     _MI_MOD,
@@ -38,7 +39,6 @@ from graphdatabases_spark.relational.graph_incremental_queries import (
 from graphdatabases_spark.relational.graph_kernels import (
     _matching_kernel,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
 )
 from graphdatabases_spark.relational.graph_queries import (
@@ -156,14 +156,12 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     mis_h = lambda c: T.portable_hash64(  # noqa: E731
         F.concat(F.lit("mis"), c.cast("string"))
     )
-    fverts = (
+    fverts, n_vertices = regime.materialize(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
         .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
     )
-    n_vertices = fverts.count()
     # persist, NOT localCheckpoint (round 14 — the _sym_und_build
     # finding): checkpointing after the repartition reports
     # UnknownPartitioning and every kernel round's groupBy(src) would
@@ -187,7 +185,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # graph MIS; adjacency-with-neighbor-status over kept edges only.
     fstat = (
         fverts.join(
-            _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+            regime.side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
             "id",
             "left",
         )
@@ -199,7 +197,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # cascade's cone-filtered rounds — see graph_mis_incremental.
     adj = (
         symq.join(
-            _mis_side(
+            regime.side(
                 fstat.select(
                     F.col("id").alias("dst"),
                     F.col("h").alias("nh"),
@@ -216,7 +214,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # Dirty seed: for each deleted symmetric edge, the LOWER-priority
     # endpoint when the higher-priority endpoint was base-TRUE — only
     # then did the dependent's blocked() lose a contributing term.
-    st = _mis_side(fstat, n_vertices)
+    st = regime.side(fstat, n_vertices)
     dele = symf.filter(is_del)
     dirty_ids = (
         dele.join(
@@ -244,15 +242,14 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("dst").alias("id"))
         .distinct()
     )
-    dirty = fstat.join(
-        _mis_side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
+    dirty, n_dirty = regime.materialize(
+        fstat.join(regime.side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi")
+    )
     delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
     adj.unpersist()
     final = (
         fstat.join(
-            _mis_side(
+            regime.side(
                 delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                 n_delta,
             ),
@@ -270,19 +267,19 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # Proof joins size-switch-broadcast the (known-count) MIS sides so
     # the persisted symf streams without a sort-merge exchange (r14).
     n_flipped = final.join(
-        _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+        regime.side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
         "id",
         "left",
     ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
     m_a = warm_mis.select(F.col("id").alias("aid"))
     m_b = warm_mis.select(F.col("id").alias("bid"))
     indep_viol = (
-        symq.join(_mis_side(m_a, warm_row["sz"]), symq.src == F.col("aid"))
-        .join(_mis_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
+        symq.join(regime.side(m_a, warm_row["sz"]), symq.src == F.col("aid"))
+        .join(regime.side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
         .count()
     )
     covered = (
-        symq.join(_mis_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
+        symq.join(regime.side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )
@@ -439,7 +436,7 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     g_keep = g.filter(~is_del).localCheckpoint(eager=True)
     estat = (
         g_keep.join(
-            _mis_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
+            regime.side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
             ["src", "dst"],
             "left",
         )
@@ -484,16 +481,14 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # with priority LOWER than the deleted edge's (strictly-higher-
     # priority adjacents never read lower-priority state, and deleted
     # FALSE edges fed no dependency).
-    del_true = (
+    del_true, n_del_true = regime.materialize(
         g.filter(is_del)
         .join(
-            _mis_side(mat_base.select("src", "dst"), base_row["sz"]),
+            regime.side(mat_base.select("src", "dst"), base_row["sz"]),
             ["src", "dst"],
             "left_semi",
         )
-        .localCheckpoint(eager=True)
     )
-    n_del_true = del_true.count()
     del_ends = (
         del_true.select(F.col("src").alias("v"), F.col("h").alias("hdel"))
         .unionByName(
@@ -507,12 +502,12 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # seed pulled ~1/3 of |E| at the deleted hubs (measured, SCALE.md
     # round 14); this is the same value-can't-change rule the shared
     # propagation applies, fuzz-pinned in both directions.
-    dirty = (
-        x.join(_mis_side(del_ends, 2 * n_del_true), "v")
+    dirty, n_dirty = regime.materialize(
+        x.join(regime.side(del_ends, 2 * n_del_true), "v")
         .filter(F.col("fh") > F.col("hdel"))
         .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
         .join(
-            _mis_side(
+            regime.side(
                 vstat0.select(
                     F.col("v").alias("ov"), F.col("m1").alias("om1")
                 ),
@@ -529,15 +524,13 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
             F.col("fs").alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_dirty = dirty.count()
     delta, n_delta = _line_warm_repair(
         spark, x, vstat0, dirty, n_dirty, n_vstat0, b=1
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            regime.side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -571,12 +564,12 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     n_mv = 2 * warm_row["sz"]
     free_viol = (
         g_keep.join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+            regime.side(mv, n_mv).withColumnRenamed("v", "xsrc"),
             g_keep.src == F.col("xsrc"),
             "left_anti",
         )
         .join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+            regime.side(mv, n_mv).withColumnRenamed("v", "xdst"),
             F.col("dst") == F.col("xdst"),
             "left_anti",
         )

@@ -14,12 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
-    _SYM_LOCAL_EDGE_MAX,
-    _SYM_LOCAL_V_MAX,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
 )
 from graphdatabases_spark.relational.graph_queries import (
@@ -118,7 +116,7 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
         # Recompute each dirty vertex from its strictly-higher-priority
         # neighbors' effective statuses (base overlaid with delta).
         nb = adjr.join(
-            _mis_side(
+            regime.side(
                 dirty.select(
                     F.col("id").alias("d"),
                     F.col("h").alias("dh"),
@@ -128,7 +126,7 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
             ),
             adj.src == F.col("d"),
         ).join(
-            _mis_side(
+            regime.side(
                 delta.select(
                     F.col("id").alias("nid"), F.col("s").alias("dls")
                 ),
@@ -148,16 +146,14 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
             .select("d")
             .distinct()
         )
-        changed = (
+        changed, n_changed = regime.materialize(
             dirty.join(
-                _mis_side(blocked, n_dirty), dirty.id == blocked.d, "left"
+                regime.side(blocked, n_dirty), dirty.id == blocked.d, "left"
             )
             .withColumn("s_new", F.col("d").isNull())
             .filter(F.col("s_new") != F.col("s"))
             .select("id", "h", F.col("s_new").alias("s"))
-            .localCheckpoint(eager=True)
         )
-        n_changed = changed.count()
         if n_changed == 0:
             break
         # The overlay is referenced twice per round (blocked + dirty
@@ -178,7 +174,7 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
         # become the next dirty set (their dependency just changed).
         cand = (
             adjr.join(
-                _mis_side(
+                regime.side(
                     changed.select(
                         F.col("id").alias("c"), F.col("h").alias("ch")
                     ),
@@ -197,9 +193,9 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
             )
             .distinct()
         )
-        dirty = (
+        dirty, n_dirty = regime.materialize(
             cand.join(
-                _mis_side(
+                regime.side(
                     delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                     n_delta,
                 ),
@@ -209,9 +205,7 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
             .select(
                 "id", "h", F.coalesce(F.col("dls"), F.col("sb")).alias("s")
             )
-            .localCheckpoint(eager=True)
         )
-        n_dirty = dirty.count()
         cone = _cone_ids(dirty, n_dirty)
     return delta, n_delta
 
@@ -309,7 +303,6 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
 
     edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
     is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
@@ -323,14 +316,12 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     mis_h = lambda c: T.portable_hash64(  # noqa: E731
         F.concat(F.lit("mis"), c.cast("string"))
     )
-    fverts = (
+    fverts, n_vertices = regime.materialize(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
         .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
     )
-    n_vertices = fverts.count()
     # persist, NOT localCheckpoint (round 14 — the _sym_und_build
     # finding applied here too): a checkpointed frame reports
     # UnknownPartitioning, so every kernel round's groupBy(src) would
@@ -348,13 +339,11 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Base phase: cold kernel on the pre-append graph (the persisted
     # prior result an incremental pipeline would read back).
     symb = symf.filter(((F.col("src") + F.col("dst")) % _MI_MOD) != 0)
-    bverts = (
+    bverts, n_bverts = regime.materialize(
         symb.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
     )
-    n_bverts = bverts.count()
     base_mis = _mis_kernel(spark, symb, bverts, n_bverts, None)
     base_row = base_mis.agg(
         F.count(F.lit(1)).cast("long").alias("sz"),
@@ -364,7 +353,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # start false), adjacency-with-neighbor-status checkpointed ONCE.
     fstat = (
         fverts.join(
-            _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+            regime.side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
             "id",
             "left",
         )
@@ -377,7 +366,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # localCheckpoint would have no batch stats to prune with.
     adj = (
         symf.join(
-            _mis_side(
+            regime.side(
                 fstat.select(
                     F.col("id").alias("dst"),
                     F.col("h").alias("nh"),
@@ -397,7 +386,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # higher priority (only true higher-priority neighbors feed
     # blocked()) — seeding every batch endpoint re-judged ~all of the
     # hub neighborhoods for nothing.
-    st = _mis_side(fstat, n_vertices)
+    st = regime.side(fstat, n_vertices)
     cand = (
         edges.filter(is_batch)
         .join(
@@ -418,7 +407,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     newv = fverts.select("id").join(
-        _mis_side(bverts.select("id"), n_bverts), "id", "left_anti"
+        regime.side(bverts.select("id"), n_bverts), "id", "left_anti"
     )
     dirty_ids = (
         cand.filter(
@@ -441,15 +430,14 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(newv)
         .distinct()
     )
-    dirty = fstat.join(
-        _mis_side(dirty_ids, 2 * n_batch_edges), "id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
+    dirty, n_dirty = regime.materialize(
+        fstat.join(regime.side(dirty_ids, 2 * n_batch_edges), "id", "left_semi")
+    )
     delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
     adj.unpersist()
     final = (
         fstat.join(
-            _mis_side(
+            regime.side(
                 delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                 n_delta,
             ),
@@ -467,19 +455,19 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Proof joins size-switch-broadcast the (known-count) MIS sides so
     # the persisted symf streams without a sort-merge exchange (r14).
     n_flipped = final.join(
-        _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+        regime.side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
         "id",
         "left",
     ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
     m_a = warm_mis.select(F.col("id").alias("aid"))
     m_b = warm_mis.select(F.col("id").alias("bid"))
     indep_viol = (
-        symf.join(_mis_side(m_a, warm_row["sz"]), symf.src == F.col("aid"))
-        .join(_mis_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
+        symf.join(regime.side(m_a, warm_row["sz"]), symf.src == F.col("aid"))
+        .join(regime.side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
         .count()
     )
     covered = (
-        symf.join(_mis_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
+        symf.join(regime.side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )
@@ -533,7 +521,7 @@ def _mat_cascade_local(
     neighborhood to the driver (the same blowup the distributed warm
     path was redesigned to avoid).  Each fetch is therefore counted
     before collecting (as _induced_local does) against a cumulative
-    _SYM_LOCAL_EDGE_MAX budget; on breach the caller falls back to the
+    regime.INDUCED_EDGE_MAX budget; on breach the caller falls back to the
     distributed relaxation, which reads only per-vertex matched-state
     and is hub-safe by construction.
 
@@ -542,10 +530,7 @@ def _mat_cascade_local(
     exactly the maximal-matching rule; graph_bmatching_incremental
     passes its capacity and an EXPLODED vstat0 (one row per base-true
     h per endpoint), and the same cascade repairs the b-matching."""
-    from graphdatabases_spark.relational.graph_kernels import (
-        _SYM_LOCAL_EDGE_MAX,
-        _ids_df,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _ids_df
 
     fetched_rows = 0
 
@@ -601,7 +586,7 @@ def _mat_cascade_local(
             # of the checkpointed index, an accepted one recomputes it
             # straight into Arrow.
             fetched_rows += sel.count()
-            if fetched_rows > _SYM_LOCAL_EDGE_MAX:
+            if fetched_rows > regime.INDUCED_EDGE_MAX:
                 return None
             rows = sel.toPandas()
             for rr in rows.itertuples(index=False):
@@ -700,8 +685,8 @@ def _line_warm_repair(
     n_vdelta = 0
     if (
         n_dirty > 0
-        and n_dirty <= _SYM_LOCAL_EDGE_MAX
-        and n_vstat0 <= _SYM_LOCAL_V_MAX
+        and n_dirty <= regime.INDUCED_EDGE_MAX
+        and n_vstat0 <= regime.BROADCAST_MAX
     ):
         # None = a lazy fetch breached the degree-aware edge budget
         # (hub endpoint); fall through to the distributed path.
@@ -722,11 +707,11 @@ def _line_warm_repair(
     def _blocked_at(side: str):
         # blocked at an endpoint: at least b true edges there with
         # h < ours — strict <, so the edge itself never blocks.
-        vd = _mis_side(
+        vd = regime.side(
             vdelta.select(F.col("v").alias(f"{side}v"), F.col("hs").alias(f"{side}hs")),
             n_vdelta,
         )
-        v0 = _mis_side(
+        v0 = regime.side(
             vstat0a.select(
                 F.col("v").alias(f"{side}v0"), F.col("hs0").alias(f"{side}hs0")
             ),
@@ -752,15 +737,13 @@ def _line_warm_repair(
             .withColumn("blk_d", _blk("d"))
             .withColumn("s_new", ~(F.col("blk_s") | F.col("blk_d")))
         )
-        changed = (
+        changed, n_changed = regime.materialize(
             judged.filter(F.col("s_new") != F.col("s"))
             .select("src", "dst", "h", F.col("s_new").alias("s"))
-            .localCheckpoint(eager=True)
         )
-        n_changed = changed.count()
         if n_changed == 0:
             break
-        delta = (
+        delta, n_delta = regime.materialize(
             delta.join(
                 changed.select(
                     F.col("src").alias("dsrc"), F.col("dst").alias("ddst")
@@ -775,24 +758,20 @@ def _line_warm_repair(
                     F.col("s").alias("dls"),
                 )
             )
-            .localCheckpoint(eager=True)
         )
-        n_delta = delta.count()
         # Vertices whose state changed: recompute their true-edge
         # h-lists from the endpoint index (one broadcast-filtered scan;
         # group sizes are the handful of true edges per vertex), and
         # keep the OLD list alongside for the propagation filter.
-        av = (
+        av, n_av = regime.materialize(
             changed.select(F.col("src").alias("v"))
             .unionByName(changed.select(F.col("dst").alias("v")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        n_av = av.count()
         trues = (
-            x.join(_mis_side(av, n_av), "v")
+            x.join(regime.side(av, n_av), "v")
             .join(
-                _mis_side(delta, n_delta),
+                regime.side(delta, n_delta),
                 (F.col("fsrc") == F.col("dsrc"))
                 & (F.col("fdst") == F.col("ddst")),
                 "left",
@@ -803,9 +782,9 @@ def _line_warm_repair(
         )
         av_states = (
             av.join(trues, "v", "left")
-            .join(_mis_side(vdelta.withColumnRenamed("hs", "ohs"), n_vdelta), "v", "left")
+            .join(regime.side(vdelta.withColumnRenamed("hs", "ohs"), n_vdelta), "v", "left")
             .join(
-                _mis_side(
+                regime.side(
                     vstat0a.select(F.col("v").alias("v"), F.col("hs0").alias("ohs0")),
                     n_vstat0,
                 ),
@@ -819,12 +798,10 @@ def _line_warm_repair(
             )
             .localCheckpoint(eager=True)
         )
-        vdelta = (
+        vdelta, n_vdelta = regime.materialize(
             vdelta.join(av_states.select("v"), "v", "left_anti")
             .unionByName(av_states.select("v", F.col("nhs").alias("hs")))
-            .localCheckpoint(eager=True)
         )
-        n_vdelta = vdelta.count()
         # Next dirty set: edges at a state-changed vertex whose
         # blocking predicate ACTUALLY flips there (count-below-b
         # against the old vs new true-h list differs) — without this
@@ -839,8 +816,8 @@ def _line_warm_repair(
         # so every predicate below reads a round-consistent snapshot.
         # Cut measured recompute from ~30% to ~4% of |E| on the
         # hub-heavy deletion cascade (SCALE.md round 14).
-        dirty = (
-            x.join(_mis_side(av_states, n_av), "v")
+        dirty, n_dirty = regime.materialize(
+            x.join(regime.side(av_states, n_av), "v")
             .withColumn(
                 "po",
                 F.size(F.filter(F.col("ohs"), lambda hh: hh < F.col("fh"))) >= b,
@@ -851,7 +828,7 @@ def _line_warm_repair(
             )
             .filter(F.col("po") != F.col("pn"))
             .join(
-                _mis_side(delta, n_delta),
+                regime.side(delta, n_delta),
                 (F.col("fsrc") == F.col("dsrc"))
                 & (F.col("fdst") == F.col("ddst")),
                 "left",
@@ -859,7 +836,7 @@ def _line_warm_repair(
             .withColumn("scur", F.coalesce(F.col("dls"), F.col("fs")))
             .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
             .join(
-                _mis_side(
+                regime.side(
                     vdelta.select(
                         F.col("v").alias("ov"), F.col("hs").alias("uhs")
                     ),
@@ -869,7 +846,7 @@ def _line_warm_repair(
                 "left",
             )
             .join(
-                _mis_side(
+                regime.side(
                     vstat0a.select(
                         F.col("v").alias("ov"), F.col("hs0").alias("uhs0")
                     ),
@@ -896,9 +873,7 @@ def _line_warm_repair(
                 F.col("scur").alias("s"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        n_dirty = dirty.count()
     return delta, n_delta
 
 
@@ -1017,10 +992,7 @@ def _mmi_mat_union(tag: str) -> str:
 )
 def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import (
-        _matching_kernel,
-        _mis_side,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _matching_kernel
 
     g = (
         entity_edges(spark, sf, dedup=True)
@@ -1061,7 +1033,7 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # it was 850 MB of the entry's sf1 shuffle).
     estat = (
         g.join(
-            _mis_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
+            regime.side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
             ["src", "dst"],
             "left",
         )
@@ -1094,8 +1066,7 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # existing edges stay consistent until some flip actually reaches
     # them (the first version seeded every edge at a batch endpoint
     # and the hub degrees made that ~all of the graph).
-    dirty = estat.filter(is_batch).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
+    dirty, n_dirty = regime.materialize(estat.filter(is_batch))
     # Per-VERTEX matched-state instead of per-edge adjacency scans
     # (second audit catch: the line-graph recompute join emitted
     # sum-of-degrees rows over the dirty set — hub degrees made that
@@ -1125,7 +1096,7 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            regime.side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -1155,12 +1126,12 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     n_mv = 2 * warm_row["sz"]
     free_viol = (
         g.join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+            regime.side(mv, n_mv).withColumnRenamed("v", "xsrc"),
             g.src == F.col("xsrc"),
             "left_anti",
         )
         .join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+            regime.side(mv, n_mv).withColumnRenamed("v", "xdst"),
             F.col("dst") == F.col("xdst"),
             "left_anti",
         )
@@ -1384,14 +1355,12 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
         .select("src", "dst", F.col("h").alias("p"), "w")
         .localCheckpoint(eager=True)
     )
-    caps = (
+    caps, n_caps = regime.materialize(
         g_base.select(F.col("src").alias("v"))
         .unionByName(g_base.select(F.col("dst").alias("v")))
         .distinct()
         .withColumn("c", F.lit(_BM_B).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    n_caps = caps.count()
     bmat_base = _bmatching_kernel(
         spark, g_base, n_edges - n_batch_edges, caps, n_caps
     )
@@ -1405,7 +1374,7 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # repair's shapes with the weight column along for the ride.
     estat = (
         g.join(
-            _mis_side(
+            regime.side(
                 bmat_base.select("src", "dst").withColumn("s0", F.lit(True)),
                 base_row["sz"],
             ),
@@ -1454,18 +1423,16 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Dirty seed: the batch edges only — they enter with status false
     # and no capacity claim, so no existing edge's dependency changes
     # until a batch edge actually flips true.
-    dirty = (
+    dirty, n_dirty = regime.materialize(
         estat.filter(is_batch)
         .select("src", "dst", "h", "s")
-        .localCheckpoint(eager=True)
     )
-    n_dirty = dirty.count()
     delta, n_delta = _line_warm_repair(
         spark, x, vstat0, dirty, n_dirty, n_vstat0, b=_BM_B
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            regime.side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -1499,8 +1466,8 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     deg_d = wdeg.select(F.col("v").alias("dst"), F.col("n").alias("nd"))
     maxviol = (
         final.filter(~F.col("sf"))
-        .join(_mis_side(deg_s, n_wdeg), "src", "left")
-        .join(_mis_side(deg_d, n_wdeg), "dst", "left")
+        .join(regime.side(deg_s, n_wdeg), "src", "left")
+        .join(regime.side(deg_d, n_wdeg), "dst", "left")
         .filter(
             (F.coalesce(F.col("ns"), F.lit(0)) < _BM_B)
             & (F.coalesce(F.col("nd"), F.lit(0)) < _BM_B)

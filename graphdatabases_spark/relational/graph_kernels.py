@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
+
 # Sub-threshold driver-local tail for the symmetry-breaking kernels
 # (round 13 — the multilevel-Louvain / local-Dijkstra pattern applied
 # to MIS/matching/coloring): the undecided set shrinks geometrically,
@@ -30,18 +32,9 @@ from pyspark.sql import functions as F
 # (sf0.1 entity sym = 2.7M edges): every swept sf still drives at
 # least one distributed round before the tail, keeping the distributed
 # path value-checked by the sweep; at 100 TB the threshold is never
-# met until the genuine tail.
-_SYM_LOCAL_V_MAX = 4_000_000     # probe induced edges only when the
-                                 # undecided set is driver-bounded
-                                 # (FRONTIER_BROADCAST_MAX — an id+h
-                                 # row is 16 B, so 4M rows ~ 64 MB)
-_SYM_LOCAL_EDGE_MAX = 1_000_000  # Arrow-collect bound on induced edges
-
-
-def _mis_side(frame: DataFrame, n_rows: int) -> DataFrame:
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
-    return F.broadcast(frame) if n_rows <= FRONTIER_BROADCAST_MAX else frame
+# met until the genuine tail.  The induced edges are probed only while
+# the undecided set is itself broadcast-sized (regime.BROADCAST_MAX),
+# and collected only under regime.INDUCED_EDGE_MAX.
 
 
 def _induced_local(
@@ -54,17 +47,17 @@ def _induced_local(
     """Collect the undecided-induced subgraph if it fits the driver.
 
     Returns ``(verts_pdf, edges_pdf)`` (pandas, Arrow transfer) when
-    ``und`` has <= _SYM_LOCAL_V_MAX vertices AND its induced symmetric
-    edge set has <= _SYM_LOCAL_EDGE_MAX rows, else ``None``.  Both
+    ``und`` has <= regime.BROADCAST_MAX vertices AND its induced symmetric
+    edge set has <= regime.INDUCED_EDGE_MAX rows, else ``None``.  Both
     semi-joins broadcast the (bounded) undecided id list, so the probe
     itself exchanges nothing beyond the count.  When ``und`` is still
     the FULL vertex set the induced set is ``sym`` itself — callers
     pass ``known_edge_count`` (the once-counted checkpointed relation)
     and the probe join is skipped entirely."""
-    if n_und > _SYM_LOCAL_V_MAX:
+    if n_und > regime.BROADCAST_MAX:
         return None
     if known_edge_count is not None:
-        if known_edge_count > _SYM_LOCAL_EDGE_MAX:
+        if known_edge_count > regime.INDUCED_EDGE_MAX:
             return None
         ind = sym
     else:
@@ -77,7 +70,7 @@ def _induced_local(
         # costs one broadcast-semi scan of the checkpointed sym (no
         # exchange, no materialization); an accepted one recomputes
         # the same bounded join straight into Arrow.
-        if ind.count() > _SYM_LOCAL_EDGE_MAX:
+        if ind.count() > regime.INDUCED_EDGE_MAX:
             return None
     return und.toPandas(), ind.select("src", "dst").toPandas()
 
@@ -133,7 +126,7 @@ def _ids_df(spark, ids: list[int]) -> DataFrame:
 def _sym_partition_key(n_vertices: int) -> str:
     """Partition key for the once-checkpointed symmetric edge relation.
 
-    Broadcast regime (V <= FRONTIER_BROADCAST_MAX — every swept sf,
+    Broadcast regime (V <= regime.BROADCAST_MAX — every swept sf,
     and the shrunk tail regime at any scale): partition by SRC.  The
     per-round neighborhood join broadcasts the undecided side, so the
     join preserves sym's partitioning and the groupBy(src) min — the
@@ -143,9 +136,7 @@ def _sym_partition_key(n_vertices: int) -> str:
     key, so the static relation shuffles once and only the per-round
     groupBy pays an exchange — the cost that regime inherently carries.
     """
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
-    return "src" if n_vertices <= FRONTIER_BROADCAST_MAX else "dst"
+    return "src" if n_vertices <= regime.BROADCAST_MAX else "dst"
 
 
 def _sym_und_build(spark, edges: DataFrame):
@@ -157,7 +148,7 @@ def _sym_und_build(spark, edges: DataFrame):
     repartition; approx_count_distinct is one scan with a 1-row
     aggregate (no meaningful exchange).  Its ~2% error could make the
     regime key disagree with the EXACT per-round broadcast decisions
-    (_mis_side) near the FRONTIER_BROADCAST_MAX boundary — sym
+    (regime.side) near the regime.BROADCAST_MAX boundary — sym
     partitioned by dst while every per-round groupBy(src) assumes src,
     each round then paying an unplanned exchange (advice r13).  So
     inside a 5% ambiguity band around the boundary the count is
@@ -166,11 +157,10 @@ def _sym_und_build(spark, edges: DataFrame):
     and is used as-is.  In the broadcast (src) regime the vertex
     distinct then reuses sym's partitioning — zero exchange."""
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
 
     vset = edges.select(F.explode(F.array("src", "dst")).alias("v"))
     v_est = vset.agg(F.approx_count_distinct("v").alias("n")).collect()[0]["n"]
-    if abs(v_est - FRONTIER_BROADCAST_MAX) <= FRONTIER_BROADCAST_MAX // 20:
+    if abs(v_est - regime.BROADCAST_MAX) <= regime.BROADCAST_MAX // 20:
         v_est = vset.distinct().count()
     # persist, NOT localCheckpoint: a checkpointed frame reports
     # UnknownPartitioning, so every per-round groupBy(src)/distinct
@@ -185,15 +175,14 @@ def _sym_und_build(spark, edges: DataFrame):
         .persist()
     )
     sym.count()
-    und = (
+    und, n_und = regime.materialize(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn(
             "h", T.portable_hash64(F.concat(F.lit("mis"), F.col("id").cast("string")))
         )
-        .localCheckpoint(eager=True)
     )
-    return sym, und, und.count()
+    return sym, und, n_und
 
 
 def _mis_kernel(
@@ -217,15 +206,13 @@ def _mis_kernel(
     outer full-finish probe) — skip the duplicate first-iteration
     probe, which would pay a second broadcast-semi scan of sym per
     color for a guaranteed-identical rejection (advice r13)."""
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     mis = None
     full_set = n_sym is not None
     skip_probe = first_probe_rejected and not full_set
     while n_und > 0:
         # Sub-threshold tail: finish the fixpoint in one driver-local
         # greedy pass once the undecided-induced subgraph fits (see
-        # _SYM_LOCAL_EDGE_MAX) — identical result, no per-round
+        # regime.INDUCED_EDGE_MAX) — identical result, no per-round
         # scheduling floor on the geometric tail.
         if skip_probe:
             tail = None
@@ -244,7 +231,7 @@ def _mis_kernel(
             break
         nbr_min = (
             sym.join(
-                _mis_side(
+                regime.side(
                     und.select(F.col("id").alias("nid"), F.col("h").alias("nh")),
                     n_und,
                 ),
@@ -253,16 +240,15 @@ def _mis_kernel(
             .groupBy("src")
             .agg(F.min(F.struct(F.col("nh"), F.col("nid"))).alias("mn"))
         )
-        win = (
+        win, n_win = regime.materialize(
             und.join(
-                _mis_side(nbr_min, n_und), und.id == nbr_min.src, "left"
+                regime.side(nbr_min, n_und), und.id == nbr_min.src, "left"
             )
             .filter(
                 F.col("mn").isNull()
                 | (F.struct(F.col("h"), F.col("id")) < F.col("mn"))
             )
             .select("id")
-            .localCheckpoint(eager=True)
         )
         mis = win if mis is None else mis.unionByName(win)
         # Winners' neighbors drop out too: neighbors-of-winners read
@@ -272,13 +258,13 @@ def _mis_kernel(
         # size-switched broadcast anti-join against und.  The previous
         # shape exchanged the raw |edges incident to winners| multiset.
         knocked = (
-            sym.join(_mis_side(win, win.count()), sym.dst == win.id)
+            sym.join(regime.side(win, n_win), sym.dst == win.id)
             .select("src")
             .distinct()
             .unionByName(win.select(F.col("id").alias("src")))
             .withColumnRenamed("src", "id")
         )
-        if n_und <= FRONTIER_BROADCAST_MAX:
+        if n_und <= regime.BROADCAST_MAX:
             # knocked may contain already-decided neighbors (sym is the
             # full static relation) — bound it to the undecided set via
             # a broadcast semi so the anti-join's broadcast side is
@@ -286,10 +272,9 @@ def _mis_kernel(
             knocked = knocked.join(
                 F.broadcast(und.select("id")), "id", "left_semi"
             )
-        und = und.join(_mis_side(knocked, n_und), "id", "left_anti").localCheckpoint(
-            eager=True
+        und, n_und = regime.materialize(
+            und.join(regime.side(knocked, n_und), "id", "left_anti")
         )
-        n_und = und.count()
     if mis is None:  # empty undecided set in — empty MIS out
         return spark.createDataFrame([], "id long")
     return mis.localCheckpoint(eager=True)
@@ -307,7 +292,7 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
         # undecided edge relation IS the collectable state — one Arrow
         # pull + the sequential greedy over (h, src, dst) order equals
         # the remaining fixpoint exactly.
-        if n_g <= _SYM_LOCAL_EDGE_MAX:
+        if n_g <= regime.INDUCED_EDGE_MAX:
             import pandas as pd
 
             pairs = _matching_greedy_py(g.select("h", "src", "dst").toPandas())
@@ -342,12 +327,11 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
             .groupBy("v")
             .agg(F.min("e").alias("e"))
         )
-        m = (
+        m, n_m = regime.materialize(
             vmw.groupBy("e")
             .agg(F.count(F.lit(1)).alias("c"))
             .filter(F.col("c") == 2)
             .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-            .localCheckpoint(eager=True)
         )
         mat = m if mat is None else mat.unionByName(m)
         # mv stays lazy over the checkpointed m (round 14): a round's
@@ -358,24 +342,22 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
         mv = m.select(F.col("src").alias("v")).unionByName(
             m.select(F.col("dst").alias("v"))
         )
-        n_mv = 2 * m.count()
+        n_mv = 2 * n_m
         # Matched vertices are <= 2x this round's matching — broadcast
         # anti-joins (size-switched), so the surviving edge set never
         # re-exchanges.
-        g = (
+        g, n_g = regime.materialize(
             g.join(
-                _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+                regime.side(mv, n_mv).withColumnRenamed("v", "xsrc"),
                 g.src == F.col("xsrc"),
                 "left_anti",
             )
             .join(
-                _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+                regime.side(mv, n_mv).withColumnRenamed("v", "xdst"),
                 F.col("dst") == F.col("xdst"),
                 "left_anti",
             )
-            .localCheckpoint(eager=True)
         )
-        n_g = g.count()
     if mat is None:  # empty edge set in — empty matching out
         return spark.createDataFrame([], "src long, dst long")
     return mat.localCheckpoint(eager=True)
@@ -399,7 +381,7 @@ def _bmatching_kernel(
 
     bmat = None
     while n_g > 0:
-        if n_g <= _SYM_LOCAL_EDGE_MAX:
+        if n_g <= regime.INDUCED_EDGE_MAX:
             # Driver-local tail: the undecided edges plus their
             # vertices' remaining capacities are the whole state; the
             # sequential greedy over (p, src, dst) with capacity
@@ -448,15 +430,14 @@ def _bmatching_kernel(
         )
         exc = (
             ex.withColumn("rk", rk)
-            .join(_mis_side(caps, n_vertices), "v")
+            .join(regime.side(caps, n_vertices), "v")
             .withColumn("ok", (F.col("rk") <= F.col("c")).cast("int"))
         )
-        win = (
+        win, n_win = regime.materialize(
             exc.groupBy("src", "dst", "p", "w")
             .agg(F.sum("ok").alias("nok"))
             .filter(F.col("nok") == 2)
             .select("src", "dst", "p", "w")
-            .localCheckpoint(eager=True)
         )
         bmat = (
             win.select("src", "dst", "w")
@@ -470,28 +451,26 @@ def _bmatching_kernel(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
         caps = (
-            caps.join(_mis_side(wv, 2 * win.count()), "v", "left")
+            caps.join(regime.side(wv, 2 * n_win), "v", "left")
             .select(
                 "v", (F.col("c") - F.coalesce(F.col("n"), F.lit(0))).alias("c")
             )
             .localCheckpoint(eager=True)
         )
         full = caps.filter(F.col("c") <= 0).select("v")
-        g = (
+        g, n_g = regime.materialize(
             g.join(win.select("src", "dst"), ["src", "dst"], "left_anti")
             .join(
-                _mis_side(full, n_vertices).withColumnRenamed("v", "xsrc"),
+                regime.side(full, n_vertices).withColumnRenamed("v", "xsrc"),
                 g.src == F.col("xsrc"),
                 "left_anti",
             )
             .join(
-                _mis_side(full, n_vertices).withColumnRenamed("v", "xdst"),
+                regime.side(full, n_vertices).withColumnRenamed("v", "xdst"),
                 F.col("dst") == F.col("xdst"),
                 "left_anti",
             )
-            .localCheckpoint(eager=True)
         )
-        n_g = g.count()
     if bmat is None:  # empty edge set in — empty b-matching out
         return spark.createDataFrame([], "src long, dst long, w long")
     return bmat.localCheckpoint(eager=True)

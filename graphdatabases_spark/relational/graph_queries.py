@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.graph.algorithms import (
     connected_components,
     pagerank,
@@ -1365,15 +1366,12 @@ def graph_cc_incremental(spark: SparkSession, sf: str) -> DataFrame:
 _MIS_ROUNDS = 8  # measured fixpoint: 4/4/5 rounds at sf0.001/0.01/0.1
 
 from graphdatabases_spark.relational.graph_kernels import (
-    _SYM_LOCAL_EDGE_MAX,
-    _SYM_LOCAL_V_MAX,
     _ids_df,
     _induced_local,
     _matching_greedy_py,
     _matching_kernel,
     _mis_greedy_py,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
     _sym_und_build,
 )
@@ -1481,12 +1479,12 @@ def graph_mis_luby(spark: SparkSession, sf: str) -> DataFrame:
     # broadcast side — the checkpointed mis carries no stats and the
     # planner otherwise sort-merge-exchanges sym per proof (round 14).
     indep_viol = (
-        sym.join(_mis_side(m_a, n_vertices), sym.src == F.col("aid"))
-        .join(_mis_side(m_b, n_vertices), sym.dst == F.col("bid"))
+        sym.join(regime.side(m_a, n_vertices), sym.src == F.col("aid"))
+        .join(regime.side(m_b, n_vertices), sym.dst == F.col("bid"))
         .count()
     )
     covered = (
-        sym.join(_mis_side(m_b, n_vertices), sym.dst == F.col("bid"))
+        sym.join(regime.side(m_b, n_vertices), sym.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )
@@ -1599,7 +1597,7 @@ def _mm_round_sql(k: int) -> str:
 def graph_matching_greedy(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
 
-    g = (
+    g, n_edges = regime.materialize(
         entity_edges(spark, sf, dedup=True)
         .withColumn(
             "h",
@@ -1614,9 +1612,7 @@ def graph_matching_greedy(spark: SparkSession, sf: str) -> DataFrame:
             * F.lit(32768)
             + (F.col("src") * 31 + F.col("dst")) % 32768,
         )
-        .localCheckpoint(eager=True)
     )
-    n_edges = g.count()
     mat = _matching_kernel(spark, g, n_edges)
     conflict = (
         mat.select(F.col("src").alias("v"))

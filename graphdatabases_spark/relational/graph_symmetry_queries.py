@@ -14,11 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _induced_local,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
     _sym_und_build,
 )
@@ -176,7 +176,7 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
     full_set = True
     while n_rem > 0:
         # Full driver-local finish: once the residual-induced subgraph
-        # fits (graph_queries._SYM_LOCAL_EDGE_MAX), every remaining
+        # fits (regime.INDUCED_EDGE_MAX), every remaining
         # color class is one in-process MIS extraction — this is where
         # the 30-round BSP scheduling floor lived (the long tail of
         # tiny hub-forced classes), and the fixed priorities make the
@@ -222,10 +222,9 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
         # mis ⊆ rem, so n_rem bounds the anti-join's broadcast side —
         # the checkpointed mis otherwise carries no stats and the
         # planner sort-merge-exchanged rem every color (round 14).
-        rem = rem.join(_mis_side(mis, n_rem), "id", "left_anti").localCheckpoint(
-            eager=True
+        rem, n_rem = regime.materialize(
+            rem.join(regime.side(mis, n_rem), "id", "left_anti")
         )
-        n_rem = rem.count()
     colored = colored.localCheckpoint(eager=True)
     ca = colored.select(F.col("id").alias("aid"), F.col("color").alias("acol"))
     cb = colored.select(F.col("id").alias("bid"), F.col("color").alias("bcol"))
@@ -234,9 +233,9 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
     # the persisted sym (measured ~2-3 s of sort-merge exchange at
     # sf0.1 without the hints, round 14).
     improper = (
-        sym.join(_mis_side(ca, n_vertices), sym.src == F.col("aid"))
+        sym.join(regime.side(ca, n_vertices), sym.src == F.col("aid"))
         .join(
-            _mis_side(cb, n_vertices),
+            regime.side(cb, n_vertices),
             (sym.dst == F.col("bid")) & (F.col("acol") == F.col("bcol")),
         )
         .count()
@@ -388,13 +387,10 @@ def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import (
-        _bmatching_kernel,
-        _mis_side,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _bmatching_kernel
 
     w_expr = (F.col("src") * 7 + F.col("dst") * 13) % 100 + 1
-    g = (
+    g, n_edges = regime.materialize(
         entity_edges(spark, sf, dedup=True)
         .withColumn("w", w_expr.cast("long"))
         .withColumn(
@@ -409,17 +405,13 @@ def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
                 )
             ),
         )
-        .localCheckpoint(eager=True)
     )
-    n_edges = g.count()
-    caps = (
+    caps, n_vertices = regime.materialize(
         g.select(F.col("src").alias("v"))
         .unionByName(g.select(F.col("dst").alias("v")))
         .distinct()
         .withColumn("c", F.lit(_BM_B).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    n_vertices = caps.count()
     # Round loop extracted to graph_kernels._bmatching_kernel (round
     # 14) so the incremental repair's cold phase shares it.
     bmat = _bmatching_kernel(spark, g, n_edges, caps, n_vertices)
@@ -444,15 +436,15 @@ def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
     # entity_edges paid the 3-way-union + distinct scan a second time)
     # and size-switch the anti-join side (result size is in hand).
     g0 = g.select("src", "dst").join(
-        _mis_side(bmat.select("src", "dst"), res["sz"]),
+        regime.side(bmat.select("src", "dst"), res["sz"]),
         ["src", "dst"],
         "left_anti",
     )
     deg_s = bdeg.select(F.col("v").alias("src"), F.col("n").alias("ns"))
     deg_d = bdeg.select(F.col("v").alias("dst"), F.col("n").alias("nd"))
     maxviol = (
-        g0.join(_mis_side(deg_s, n_vertices), "src", "left")
-        .join(_mis_side(deg_d, n_vertices), "dst", "left")
+        g0.join(regime.side(deg_s, n_vertices), "src", "left")
+        .join(regime.side(deg_d, n_vertices), "dst", "left")
         .filter(
             (F.coalesce(F.col("ns"), F.lit(0)) < _BM_B)
             & (F.coalesce(F.col("nd"), F.lit(0)) < _BM_B)

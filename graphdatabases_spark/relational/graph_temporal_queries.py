@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import regime
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
@@ -48,18 +49,6 @@ def _dated_entity_edges(spark: SparkSession, sf: str) -> DataFrame:
         ship.alias("t"),
     )
     return o.union(op).union(ps).distinct().localCheckpoint(eager=True)
-
-
-def _labels_side(labels: DataFrame, n_labels: int) -> DataFrame:
-    """Size-switched join side for a per-round label/frontier relation:
-    broadcast while it fits (the common case — seed cones at test sfs),
-    keyed shuffle join once it outgrows ``FRONTIER_BROADCAST_MAX`` (the
-    label relation grows to the seeds' reachable cone, ~|touched V|, so
-    an unconditional broadcast risks the 8 GB limit / driver memory at
-    scale — the traversal._EdgeSides discipline)."""
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
-    return F.broadcast(labels) if n_labels <= FRONTIER_BROADCAST_MAX else labels
 
 
 # ---------------------------------------------------------------------------
@@ -283,20 +272,18 @@ def graph_temporal_reach(spark: SparkSession, sf: str) -> DataFrame:
     n_arr = len(_TR_SEEDS)
     for _ in range(_TR_ROUNDS):
         # The label relation grows to the seeds' reachable cone, so the
-        # broadcast is size-switched (_labels_side); the count is free —
-        # arr is an eagerly-checkpointed frame each round.
+        # broadcast is size-switched (regime.side); the count is free —
+        # it is the action that fills arr's checkpoint each round.
         cand = (
-            tedges.join(_labels_side(arr, n_arr), tedges.src == arr.id)
+            tedges.join(regime.side(arr, n_arr), tedges.src == arr.id)
             .filter(F.col("t") >= F.col("d"))
             .select("seed", F.col("dst").alias("id"), F.col("t").alias("d"))
         )
-        arr = (
+        arr, n_arr = regime.materialize(
             arr.unionByName(cand)
             .groupBy("seed", "id")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
-        n_arr = arr.count()
     return (
         arr.filter(F.col("id") != F.col("seed"))
         .select("seed", "id", F.col("d").cast("long").alias("arrival_day"))
@@ -477,7 +464,7 @@ def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
     # relation — is broadcast against the dst-keyed edges (without it
     # the planner sort-merged the FULL 13.4M-row edge list per round:
     # measured 37x shuffle at the 10x step, restored to linear). The
-    # broadcast is size-switched via _labels_side (FRONTIER_BROADCAST_MAX)
+    # broadcast is size-switched via regime.side (regime.BROADCAST_MAX)
     # for when a cone outgrows the broadcast limit. MAX-merge is
     # confluent, so the delta schedule reaches the identical fixpoint
     # the oracle's full unrolled relaxation does.
@@ -486,14 +473,14 @@ def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
     for _ in range(_TR_ROUNDS):
         cand = (
             tedges.join(
-                _labels_side(frontier, n_frontier),
+                regime.side(frontier, n_frontier),
                 tedges.dst == frontier.id,
             )
             .filter(F.col("t") <= F.col("d"))
             .groupBy("tgt", F.col("src").alias("id"))
             .agg(F.max("t").alias("cd"))
         )
-        frontier = (
+        frontier, n_frontier = regime.materialize(
             cand.join(
                 ld.select(
                     F.col("tgt").alias("ltgt"),
@@ -505,9 +492,7 @@ def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
             )
             .filter(F.col("od").isNull() | (F.col("cd") > F.col("od")))
             .select("tgt", "id", F.col("cd").alias("d"))
-            .localCheckpoint(eager=True)
         )
-        n_frontier = frontier.count()
         ld = (
             ld.unionByName(frontier)
             .groupBy("tgt", "id")
@@ -598,19 +583,17 @@ def graph_temporal_reach_delta(spark: SparkSession, sf: str) -> DataFrame:
         n_arr = len(_TR_SEEDS)
         for _ in range(_TR_ROUNDS):
             cand = (
-                edges.join(_labels_side(arr, n_arr), edges.src == arr.id)
+                edges.join(regime.side(arr, n_arr), edges.src == arr.id)
                 .filter(F.col("t") >= F.col("d"))
                 .select(
                     "seed", F.col("dst").alias("id"), F.col("t").alias("d")
                 )
             )
-            arr = (
+            arr, n_arr = regime.materialize(
                 arr.unionByName(cand)
                 .groupBy("seed", "id")
                 .agg(F.min("d").alias("d"))
-                .localCheckpoint(eager=True)
             )
-            n_arr = arr.count()
         return arr
 
     full = relax(tedges).withColumnRenamed("d", "arrival_full")

@@ -101,6 +101,43 @@ class TestReads:
         rows = engine.ssp(0, 4, strategy="local").collect()
         assert rows[0]["dist"] == 4
 
+    def test_engine_graph_traverses_locally_under_auto(self, engine, tmp_path):
+        """load_database + add_edge + flush unions Python-row frames into
+        the edge plan.  Those have no statistics, so Catalyst reports a
+        ~1e18-byte placeholder size; 'auto' must probe the real size and
+        take the local path, and its answers equal the distributed
+        kernel's."""
+        from graphdatabases_spark.graph import regime
+
+        n = 6
+        nodes_f = tmp_path / "nodes.txt"
+        edges_f = tmp_path / "edges.tsv"
+        nodes_f.write_text("".join(f"{i}\n" for i in range(n * n)))
+        edges_f.write_text(
+            "".join(
+                f"{i}\t{j}\n"
+                for i in range(n * n)
+                for j in (i + 1, i + n)
+                if j < n * n and (j == i + n or i % n != n - 1)
+            )
+        )
+        engine.load_database(str(nodes_f), str(edges_f))
+        engine.add_node(100)
+        engine.add_edge(n * n - 1, 100)
+        engine.add_edge(100, 0)
+        engine.flush()
+        plan = engine.graph.edge_pairs()
+        assert regime.plan_size_bytes(plan) >= 4 << 30
+        with regime.strategy(plan, "auto") as (chosen, _):
+            assert chosen == "local"
+        for h in (2, 4):
+            auto = sorted(r["id"] for r in engine.get_nodes_hops(0, h).collect())
+            dist = engine.get_nodes_hops(0, h, strategy="distributed").collect()
+            assert auto == sorted(r["id"] for r in dist)
+        path = engine.ssp(0, 100).collect()
+        assert path == engine.ssp(0, 100, strategy="distributed").collect()
+        assert path[0]["dist"] == 2 * (n - 1) + 1
+
 
 class TestIngest:
     def test_tsv_roundtrip(self, engine, tmp_path, spark):

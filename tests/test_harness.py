@@ -209,8 +209,9 @@ class TestWorkloadGoldens:
         engine = GraphEngine(spark)
         bench_add_single_edge(engine, 100)
         assert engine.graph.num_edges() == 99
-        # Chain closed form: SSP(0, 99) = 99 hops.
-        assert engine.ssp(0, 99).collect()[0]["dist"] == 99
+        # Chain closed form: SSP(0, 99) = 99 hops, on the distributed
+        # kernel ('auto' finishes this engine-built chain on the driver).
+        assert engine.ssp(0, 99, strategy="distributed").collect()[0]["dist"] == 99
 
     def test_grid_traversal_and_spp(self, spark):
         """Reference workload parameters scaled down: 20×20 grid,
@@ -220,9 +221,10 @@ class TestWorkloadGoldens:
         assert engine.graph.num_vertices() == 400
         assert engine.graph.num_edges() == 2 * 20 * 19
         h = 5
-        assert engine.get_nodes_hops(0, h).count() == h * (h + 3) // 2
+        dist = "distributed"  # the workload entries below run 'auto'
+        assert engine.get_nodes_hops(0, h, strategy=dist).count() == h * (h + 3) // 2
         k = 7
-        assert engine.ssp(1, 21 * k).collect()[0]["dist"] == 2 * k - 1
+        assert engine.ssp(1, 21 * k, strategy=dist).collect()[0]["dist"] == 2 * k - 1
         bench_traversal(engine, size=10)  # smoke via workload entry
         bench_spp(engine, size=3)
 

@@ -96,12 +96,12 @@ class TestIterativePlanBounded:
         assert big_len < small_len * 3, (small_len, big_len)
 
     def test_frontier_join_side_is_size_adaptive(self, spark, monkeypatch):
-        """A frontier under FRONTIER_BROADCAST_MAX must broadcast; one
+        """A frontier under regime.BROADCAST_MAX must broadcast; one
         over it must NOT (a huge frontier broadcast blows the 8 GB limit
         at scale) — it shuffle-joins the src-clustered edge copy instead,
         and the traversal answer must not change."""
         from graphdatabases_spark.graph import grid_graph, khop
-        from graphdatabases_spark.graph import traversal
+        from graphdatabases_spark.graph import regime, traversal
 
         g = grid_graph(spark, 12)
         edges = g.edges.select("src", "dst")
@@ -123,7 +123,7 @@ class TestIterativePlanBounded:
             assert "BroadcastHashJoin" in small
             big = physical_plan(
                 sides.join_frontier(
-                    frontier, frontier_rows=traversal.FRONTIER_BROADCAST_MAX + 1
+                    frontier, frontier_rows=regime.BROADCAST_MAX + 1
                 )
             )
             assert "BroadcastHashJoin" not in big, big
@@ -139,7 +139,7 @@ class TestIterativePlanBounded:
 
         baseline = {r["id"] for r in khop(g, 1, 6, strategy="distributed").collect()}
         # Force every round onto the shuffle path end-to-end.
-        monkeypatch.setattr(traversal, "FRONTIER_BROADCAST_MAX", 0)
+        monkeypatch.setattr(regime, "BROADCAST_MAX", 0)
         shuffled = {r["id"] for r in khop(g, 1, 6, strategy="distributed").collect()}
         assert shuffled == baseline and len(baseline) > 0
 
@@ -148,12 +148,11 @@ class TestIterativePlanBounded:
         (dist, path) row when every round is forced onto the shuffle
         join (its frontier rows are bigger than BFS's, so it has its own
         size scaling)."""
-        from graphdatabases_spark.graph import grid_graph, ssp
-        from graphdatabases_spark.graph import traversal
+        from graphdatabases_spark.graph import grid_graph, regime, ssp
 
         g = grid_graph(spark, 10)
         want = ssp(g, 1, 11 * 4, strategy="distributed").collect()
-        monkeypatch.setattr(traversal, "FRONTIER_BROADCAST_MAX", 0)
+        monkeypatch.setattr(regime, "BROADCAST_MAX", 0)
         got = ssp(g, 1, 11 * 4, strategy="distributed").collect()
         assert got == want and want[0]["dist"] == 7
 
