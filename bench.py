@@ -114,8 +114,10 @@ HEADLINE = [
     # local-move passes + 2 contractions; level 0 dominates).
     "graph_louvain_multilevel",
     # round 11: incremental rank maintenance (6 cold + 3 warm-start
-    # fixed-point rounds over the entity graph; the per-round cost is
-    # 3 bounded shuffles, phase setup is one checkpointed edge scan).
+    # fixed-point rounds over the entity graph; phase setup is one
+    # checkpointed edge scan; below regime.LOCAL_EDGE_MAX edges each
+    # phase is one Arrow collect and numpy rounds on the driver, above
+    # it each round is a join plus a dst-keyed aggregation).
     "graph_pagerank_incremental",
     # round 11: the mergeable-serving trio — priority sampling
     # (TakeOrdered, ~0 shuffle), HLL time-axis rollup (register-state

@@ -13,6 +13,9 @@ Scale discipline shared by all loops:
 - ``localCheckpoint`` every few rounds to truncate lineage (iterative
   plan blowup is the classic failure mode)
 - early exit on convergence via a cheap aggregate
+- an edge set small enough for the driver (``regime.strategy``) is
+  collected once and the whole kernel runs there, in numpy or Python:
+  N distributed rounds would pay N job latencies for no parallelism
 """
 
 from __future__ import annotations
@@ -29,7 +32,9 @@ from graphdatabases_spark.graph import regime
 from graphdatabases_spark.graph.model import PropertyGraph
 from graphdatabases_spark.graph.traversal import (
     _collect_adjacency,
+    _collect_index,
     _local_result_df,
+    _numpy_result_df,
     hash_partitioned_on,
 )
 
@@ -41,6 +46,12 @@ COMP_SCHEMA = StructType(
 )
 LABEL_SCHEMA = StructType(
     [StructField("id", LongType(), False), StructField("label", LongType(), False)]
+)
+UNITS_SCHEMA = StructType(
+    [
+        StructField("id", LongType(), False),
+        StructField("rank_units", LongType(), False),
+    ]
 )
 CORE_SCHEMA = StructType(
     [
@@ -489,6 +500,103 @@ def personalized_pagerank_batch_units(
         links.unpersist()
 
 
+def _pagerank_units_local(
+    graph: PropertyGraph | DataFrame,
+    edges: DataFrame,
+    num_iters: int,
+    damping_pct: int,
+    unit_scale: int,
+    init_ranks: DataFrame | None,
+) -> DataFrame | None:
+    """``pagerank_units`` on the driver, bit-identical to the distributed
+    rounds, or None for an input whose distributed answer it would not
+    reproduce (the caller then runs distributed):
+
+    - a null or non-integer edge endpoint or vertex id (the joins drop
+      nulls);
+    - a vertex id repeated in the vertex frame, or in ``init_ranks``
+      among the vertices (the joins would repeat the vertex's rows);
+    - negative units or ``damping_pct`` outside 0..100 (numpy's ``//``
+      floors where Spark's ``div`` truncates toward zero);
+    - an int64 overflow, where Spark raises (ANSI) and numpy would
+      wrap.  No round's unit total exceeds B = max(Σ initial units,
+      n · unit_scale), so B < 2^63 keeps every sum in range; the one
+      product, ``damping_pct · msg``, is checked per round against the
+      round's largest message.
+
+    As in the distributed joins, ``outdeg`` counts every edge row of a
+    src, and contributions flow only between vertices.
+    """
+    import numpy as np
+    import pyarrow.compute as pc
+
+    idx = _collect_index(edges)
+    if idx.src.dtype.kind != "i" or idx.dst.dtype.kind != "i":
+        return None
+    if not 0 <= damping_pct <= 100 or unit_scale < 0:
+        return None
+    if isinstance(graph, PropertyGraph):
+        ids = graph.vertices.select(F.col("id").cast("long")).toArrow().column("id")
+        if ids.null_count:
+            return None
+        verts = np.sort(ids.to_numpy())
+        if (verts[1:] == verts[:-1]).any():
+            return None
+    else:
+        verts = idx.universe.astype(np.int64)
+    n = len(verts)
+
+    def positions(ids):
+        """Positions of ``ids`` in ``verts``, and which ids are vertices."""
+        pos = np.searchsorted(verts, ids)
+        hit = pos < n
+        hit[hit] = verts[pos[hit]] == ids[hit]
+        return pos, hit
+
+    if max(n, 1) * unit_scale >= 2**63:
+        return None
+    ranks = np.full(n, unit_scale, dtype=np.int64)
+    if init_ranks is not None:
+        prev = init_ranks.select(
+            F.col("id").cast("long").alias("id"),
+            F.col("rank_units").cast("long").alias("rank_units"),
+        ).toArrow()
+        known = prev.column("id").is_valid()
+        pos, hit = positions(prev.column("id").filter(known).to_numpy())
+        if len(np.unique(pos[hit])) != np.count_nonzero(hit):
+            return None
+        prev_units = pc.fill_null(prev.column("rank_units").filter(known), unit_scale)
+        ranks[pos[hit]] = prev_units.to_numpy()[hit]
+        if (ranks < 0).any() or sum(ranks.tolist()) >= 2**63:
+            return None
+
+    # idx.src is sorted, so each src's rows are one CSR segment whose
+    # length is the src's outdeg, counted over every edge row.
+    seg = np.diff(idx.indptr)
+    deg = np.repeat(seg, seg)
+    sp, src_ok = positions(idx.src)
+    dp, dst_ok = positions(idx.dst)
+    keep = src_ok & dst_ok
+    # dst-sorted edges: each vertex's message is one exact int64
+    # reduceat segment (a float64 bincount would round above 2^53).
+    order = np.argsort(dp[keep], kind="stable")
+    e_src, e_dst, e_deg = sp[keep][order], dp[keep][order], deg[keep][order]
+    starts = np.flatnonzero(np.diff(e_dst, prepend=-1))
+
+    base_units = ((100 - damping_pct) * unit_scale) // 100
+    msg_max = (2**63 - 1) // max(damping_pct, 1)
+    for _ in range(num_iters):
+        msg = np.zeros(n, dtype=np.int64)
+        if len(starts):
+            msg[e_dst[starts]] = np.add.reduceat(ranks[e_src] // e_deg, starts)
+        if msg.max(initial=0) > msg_max:
+            return None
+        ranks = base_units + (damping_pct * msg) // 100
+    return _numpy_result_df(
+        _spark_of(edges), {"id": verts, "rank_units": ranks}, UNITS_SCHEMA
+    )
+
+
 def pagerank_units(
     graph: PropertyGraph | DataFrame,
     num_iters: int = 10,
@@ -517,17 +625,28 @@ def pagerank_units(
     rounds_warm < rounds_cold / identical-fixed-point pin in
     ``tests/test_round11_graph.py``.
 
-    Scale shape: the (src, dst, outdeg) relation shuffles once and is
-    reused every round; each round is one join (reusing the edge
-    partitioning) plus one dst-keyed aggregation; state is one BIGINT
-    per vertex; lineage truncated every ``regime.CHECKPOINT_EVERY`` rounds.
-    No local fast path is needed: integer ops remove the only
-    cross-strategy divergence (same policy as the per-seed kernel).
+    Regimes (``regime.strategy``): an edge set small enough for the
+    driver is collected once (the Arrow CSR cache) and all rounds run
+    in numpy: one collect instead of several Spark jobs per round; the
+    integer arithmetic makes it return the distributed bits exactly
+    (``_pagerank_units_local`` lists the inputs it hands back to the
+    distributed path).  Distributed, the (src, dst, outdeg) relation
+    shuffles once and is reused every round; each round is one join
+    (reusing the edge partitioning) plus one dst-keyed aggregation;
+    state is one BIGINT per vertex; lineage truncated every
+    ``regime.CHECKPOINT_EVERY`` rounds.
 
     Returns DataFrame(id BIGINT, rank_units BIGINT) over the graph's
     full vertex set.
     """
     edges = _edges(graph)
+    with regime.strategy(edges, "auto") as (chosen, edges):
+        if chosen == "local":
+            ranks = _pagerank_units_local(
+                graph, edges, num_iters, damping_pct, unit_scale, init_ranks
+            )
+            if ranks is not None:
+                return ranks
     # The vertex frame re-enters the plan EVERY round (the left join
     # that hands each vertex its base units) — materialize it once;
     # without this each round re-runs the edge scan + explode-distinct

@@ -49,10 +49,12 @@ CHECKPOINT_EVERY = 4
 # count.
 _EDGES_PER_HOP = 500_000
 
-# Catalyst statistics decide without a job: below 64 MB the edge set
-# certainly fits the driver, above 4 GB it certainly does not; in
-# between one count pass decides.
-_STATS_LOCAL_BYTES = 64 << 20
+# Catalyst statistics decide without a job: below 32 bytes per edge of
+# the local cap (64 MB at the default cap) the edge set certainly fits
+# the driver, above 4 GB it certainly does not; in between one count
+# pass decides.  The local bound follows LOCAL_EDGE_MAX at call time,
+# so a cap of 0 forces the distributed regime.
+_STATS_BYTES_PER_EDGE = 32
 _STATS_DIST_BYTES = 4 << 30
 
 
@@ -104,12 +106,13 @@ def _stats_decision(edges: DataFrame) -> str:
     # traversal imports this module; its adjacency cache is read lazily.
     from graphdatabases_spark.graph.traversal import _ADJ_CACHE
 
-    if edges.semanticHash() in _ADJ_CACHE:  # already collected: no job
-        return "local"
+    cached = _ADJ_CACHE.get(edges.semanticHash())
+    if cached is not None and len(cached.src) <= LOCAL_EDGE_MAX:
+        return "local"  # already collected: no job
     size = plan_size_bytes(edges)
     if size is None:
         return "probe"
-    if size <= _STATS_LOCAL_BYTES:
+    if size <= LOCAL_EDGE_MAX * _STATS_BYTES_PER_EDGE:
         return "local"
     if size >= _STATS_DIST_BYTES and not _has_statsless_leaf(edges):
         return "distributed"

@@ -255,11 +255,14 @@ def _pr_units_py(edges, init=None, num_iters=None, tol=None, max_iters=400):
 
 
 class TestPagerankIncremental:
-    def test_distributed_kernel_bit_equality(self, spark, sf_dir):
+    def test_distributed_kernel_bit_equality(self, spark, sf_dir, monkeypatch):
         """pagerank_units == the Python integer replay EXACTLY, for both
         the cold base phase and the warm-start phase — integer contribs
         and sums are associative/commutative, so partitioning cannot
-        change a single bit."""
+        change a single bit.  Run in both regimes: the default one (a
+        test-sized graph runs on the driver) and with the local cap at
+        0 (the distributed rounds)."""
+        from graphdatabases_spark.graph import regime
         from graphdatabases_spark.graph.algorithms import pagerank_units
 
         edges = _entity_edges_py(sf_dir)
@@ -268,22 +271,40 @@ class TestPagerankIncremental:
         exp_warm, _ = _pr_units_py(edges, init=exp_base, num_iters=3)
 
         edf = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-        got_base_df = pagerank_units(
-            edf.filter(((F.col("src") + F.col("dst")) % _PR_MOD) != 0),
-            num_iters=6,
-            unit_scale=_PR_U,
-        )
-        got_base = {
-            r["id"]: r["rank_units"] for r in got_base_df.collect()
-        }
-        assert got_base == exp_base
-        got_warm_df = pagerank_units(
-            edf, num_iters=3, unit_scale=_PR_U, init_ranks=got_base_df
-        )
-        got_warm = {
-            r["id"]: r["rank_units"] for r in got_warm_df.collect()
-        }
-        assert got_warm == exp_warm
+        for local_cap in (regime.LOCAL_EDGE_MAX, 0):
+            monkeypatch.setattr(regime, "LOCAL_EDGE_MAX", local_cap)
+            got_base_df = pagerank_units(
+                edf.filter(((F.col("src") + F.col("dst")) % _PR_MOD) != 0),
+                num_iters=6,
+                unit_scale=_PR_U,
+            )
+            got_base = {
+                r["id"]: r["rank_units"] for r in got_base_df.collect()
+            }
+            assert got_base == exp_base, local_cap
+            got_warm_df = pagerank_units(
+                edf, num_iters=3, unit_scale=_PR_U, init_ranks=got_base_df
+            )
+            got_warm = {
+                r["id"]: r["rank_units"] for r in got_warm_df.collect()
+            }
+            assert got_warm == exp_warm, local_cap
+
+    def test_entry_job_count(self, spark, sf_dir):
+        """Below the local cap each phase collects its edge set once
+        and runs its rounds on the driver: the whole entry, its collect
+        included, launches at most 12 Spark jobs (as 6 + 3 distributed
+        rounds it launched 60)."""
+        sc = spark.sparkContext
+        group = "test-graph-pagerank-incremental-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            rows = queries()["graph_pagerank_incremental"](spark, sf_dir).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 25
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 12, len(jobs)
 
     def test_warm_start_fewer_rounds_identical_fixed_point(self, sf_dir):
         """THE incremental claim: on the symmetrized entity graph (cycles,

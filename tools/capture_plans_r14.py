@@ -123,8 +123,12 @@ def main() -> None:
     _DF.localCheckpoint = lambda self, eager=True: self
 
     from graphdatabases_spark.relational.graph_queries import entity_edges
+    from graphdatabases_spark.graph import regime
     from graphdatabases_spark.graph.algorithms import pagerank_units
 
+    # Local cap 0: both kernels run their distributed rounds, not the
+    # driver-local regime an sf0.1 edge set would get.
+    regime.LOCAL_EDGE_MAX = 0
     ranks = pagerank_units(entity_edges(spark, SF, dedup=True), num_iters=1)
     with open(f"{OUT}/kernel_pagerank_round_{TAG}.txt", "w") as fh:
         fh.write(explain_formatted(ranks))
